@@ -160,8 +160,7 @@ object Bench {
         else "blog"
       CrawlLoop.entryOf(u, kind, 0, 0, 0, 0)
     }
-    val robots = s.emptyDataset[SyntheticWeb.Robots]
-    val sched = PoliteScheduler.scheduleSql(frontier, robots, 0L,
+    val sched = PoliteScheduler.scheduleSql(frontier, Map.empty, 0L,
       PoliteScheduler.Config(hostBudget = Int.MaxValue, defaultDelayMs = 0L))
     val parsed = sched.toDF()
       .withColumn("url_hash", col("entry.urlHash"))
@@ -234,8 +233,7 @@ object Bench {
         val sched =
           if (impl == "agg")
             PoliteScheduler.scheduleWithMap(frontier, robots, 0L, cfg)
-          else PoliteScheduler.scheduleSql(frontier,
-            s.emptyDataset[SyntheticWeb.Robots], 0L, cfg)
+          else PoliteScheduler.scheduleSql(frontier, robots, 0L, cfg)
         sched.toDF().count()
       } finally s.conf.set(key, saved)
     }
@@ -394,7 +392,7 @@ object Bench {
       results("crawl_end_to_end_urls_per_sec") = crawlUrls / crawlSec
 
       // the same loop at 4× the items per page: wave count stays the
-      // same (depth-bound), the per-wave FIXED cost (4 jobs) stays the
+      // same (depth-bound), the per-wave FIXED cost (4 snapshot writes) stays the
       // same, so throughput should rise with wave size — the direct
       // evidence for the "overhead amortizes into the data plane" claim
       val webCfg4x = webCfg.copy(itemsPerPage = webCfg.itemsPerPage * 4)

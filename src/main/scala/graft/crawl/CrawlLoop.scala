@@ -24,13 +24,14 @@ import graft.url.UrlCanon
   *     simultaneously the resumability contract (north_rule) AND the
   *     lineage truncation that keeps plan depth constant across hundreds
   *     of waves (no ever-growing DAG, no driver OOM);
-  *   - EXACTLY FOUR Spark jobs per wave — the four snapshot writes
-  *     (fetch_log, records, frontier, seen delta). All count metrics
-  *     (scheduled / records / new_links and the loop's own frontier-count
-  *     termination check) come from the written Parquet FOOTERS
-  *     (driver-side metadata, no job — [[SnapshotStore.rowCount]]);
-  *     fetched_ok / retries ride the fetch_log write as accumulators. The
-  *     r1 loop spent ~10 jobs/wave, half of them metric `count()`s;
+  *   - FOUR actions per wave — the four snapshot writes (fetch_log,
+  *     records, frontier, seen delta). Spark splits each into several jobs
+  *     (AQE query stages, broadcasts): perfbench's traced crawl_deep runs
+  *     read 16-17 jobs per wave on 4 cores. No action is a metric: all
+  *     count metrics (scheduled / records / new_links and the loop's own
+  *     frontier-count termination check) come from the written Parquet
+  *     FOOTERS (driver-side metadata, no job — [[SnapshotStore.rowCount]]);
+  *     fetched_ok / retries ride the fetch_log write as accumulators;
   *   - the SEEN table is append-only deltas (`seen_w*`), never a rewrite
   *     of the full set: at 10^10 URLs rewriting seen every wave is
   *     O(crawl²) I/O. Readers union the deltas, which are distinct by
@@ -57,16 +58,15 @@ import graft.url.UrlCanon
   *     segments, so no URL hash ever transits the driver (at 10^10 URLs
   *     the hash stream would be ~80 GB through the driver over a crawl;
   *     the segment partials are bounded by buckets × segment bytes per
-  *     task regardless of wave size). `bloomImpl = "perwave"` keeps the
-  *     distributed per-wave rebuild as a no-driver-state fallback.
+  *     task regardless of wave size).
   *
   * Robots gating (absent in the reference, required by north_rule) is an
   * ADMISSION filter: a disallowed URL never enters the frontier (otherwise
   * it would sit there unscheduled forever); crawl delays come from the
-  * robots table at schedule time. `robotsImpl = "join"` swaps the
-  * driver-collected map for broadcast joins against the robots Dataset —
-  * the 10^8-host path where the map would OOM the driver (CrawlLoopSpec
-  * proves the two produce identical crawls).
+  * robots table at schedule time. Robots are collected once per crawl
+  * into a broadcast map: a broadcast-join twin, measured on perfbench's
+  * crawl_deep (4 vCPUs), gave identical crawls at +32% driver heap and
+  * -8% throughput.
   */
 object CrawlLoop extends Serializable {
 
@@ -75,33 +75,17 @@ object CrawlLoop extends Serializable {
       seenCfg: UrlSeen.Config = UrlSeen.Config(),
       maxAttempts: Int = 3, // R2: drop after 3 tries
       maxWaves: Int = 64,
-      useBloom: Boolean = true,
       // below this seen-set size the bloom probe costs more than the
       // anti-join it accelerates — skip it (the exact join is always the
       // authority, so this is purely a cost knob)
       bloomMinSeen: Long = 4096L,
-      // "agg" = typed Aggregator (map-side bounded top-k; default),
-      // "sql" = window-function twin (Tungsten-only, for huge waves).
-      // SchedulerSpec proves the two produce identical waves.
-      schedulerImpl: String = "agg",
-      // "map"  = robots collected to a driver map + broadcast (fast path
-      //          for thousands of hosts);
-      // "join" = robots as a broadcast-joined table (the 10^8-host path —
-      //          robots never transits the driver).
-      robotsImpl: String = "map",
-      // "auto"        = "incremental" below bloomDeltaThreshold seen URLs,
-      //                 "delta" at or above it (default);
-      // "incremental" = driver-maintained segments fed by a hash
-      //                 CollectionAccumulator — small-crawl fast path,
-      //                 driver traffic O(new URLs per wave);
-      // "delta"       = driver-maintained segments fed by a
-      //                 SegmentAccumulator riding the seen-delta write —
-      //                 tasks build bloom partials, the driver OR-merges
-      //                 fixed-size segments; no URL hash transits the
-      //                 driver (the 10^10-URL path);
-      // "perwave"     = distributed rebuild from the seen union each wave.
-      // CrawlLoopSpec proves all of them produce the identical crawl.
-      bloomImpl: String = "auto",
+      // how a wave feeds the driver's bloom segments: below this seen-set
+      // size its new hashes ride the seen-delta write in a hash
+      // CollectionAccumulator (driver traffic O(new URLs per wave)); at or
+      // above it tasks build bloom partials in a SegmentAccumulator and
+      // the driver OR-merges fixed-size segments, so no URL hash transits
+      // the driver. CrawlLoopSpec checks both, and a crawl that crosses
+      // the threshold, against the sequential simulator.
       bloomDeltaThreshold: Long = 1L << 17,
       // name of a BucketedPages catalog table (bucketed+sorted by
       // url_hash); when set, the fetch join reads it in place
@@ -135,9 +119,6 @@ object CrawlLoop extends Serializable {
       seed, depth, pageIdx, posInPage, attempts)
   }
 
-  /** See [[graft.url.UrlCanon.pathOf]] — the one shared definition. */
-  def pathOf(url: String): String = UrlCanon.pathOf(url)
-
   /** Run the crawl from seeds to empty frontier (or maxWaves). `pages` must
     * be the input_hint-shaped table (ignored when `cfg.pagesTable` points
     * at a bucketed catalog table).
@@ -147,25 +128,11 @@ object CrawlLoop extends Serializable {
       cfg: Config = Config()): Result = {
     import spark.implicits._
 
-    val useRobotsJoin = cfg.robotsImpl == "join"
-    val robotsMap: Map[String, (Seq[String], Long)] =
-      if (useRobotsJoin) Map.empty
-      else robots.collect()
-        .map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap
+    val robotsMap: Map[String, (Seq[String], Long)] = robots.collect()
+      .map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap
     val bcRobots = spark.sparkContext.broadcast(robotsMap)
-    def allowedRow(e: FrontierEntry): Boolean =
-      bcRobots.value.get(e.host) match {
-        case Some((prefixes, _)) =>
-          val p = pathOf(e.url); !prefixes.exists(p.startsWith)
-        case None => true
-      }
-    // the "join"-path twin of allowedRow: broadcast-join admission filter
-    // over FrontierEntry-shaped frames (PoliteScheduler.admitJoin — robots
-    // never transits the driver)
     def admit(df: Dataset[FrontierEntry]): Dataset[FrontierEntry] =
-      if (useRobotsJoin)
-        PoliteScheduler.admitJoin(df.toDF(), robots).as[FrontierEntry]
-      else df.filter(allowedRow _)
+      df.filter(e => PoliteScheduler.allowed(bcRobots.value, e))
 
     // pages side of the fetch join: bucketed table (NO shuffle, NO cache —
     // the 100 TB path reads its co-partitioned buckets in place) or a
@@ -197,66 +164,26 @@ object CrawlLoop extends Serializable {
         frontier0.select(col("urlHash").as("url_hash")).distinct().toDF()
       else seenUnion()
 
-    // driver-side Bloom segment map, shared by the "incremental" and
-    // "delta" modes ("perwave" rebuilds from the seen union instead).
-    // Seeded ONCE per crawl from the starting seen set: small starts
-    // collect the hashes (one job); large resumes build the segments
-    // DISTRIBUTED (UrlSeen.buildSegments) and collect only the nBuckets-row
-    // segment table — the driver never sees a hash.
-    // an unrecognized mode would silently keep a stale driver bloom whose
-    // false NEGATIVES bypass the exact anti-join — fail fast instead
-    require(Set("auto", "incremental", "delta", "perwave")(cfg.bloomImpl),
-      s"unknown bloomImpl '${cfg.bloomImpl}' " +
-        "(expected auto | incremental | delta | perwave)")
-    val driverBloom = cfg.useBloom && cfg.bloomImpl != "perwave"
+    // driver-side Bloom segment map, seeded ONCE per crawl from the
+    // starting seen set: small starts collect the hashes (one job); large
+    // resumes build the segments DISTRIBUTED (UrlSeen.buildSegments) and
+    // collect only the nBuckets-row segment table — the driver never sees
+    // a hash
     val segMap = scala.collection.mutable.Map[Int, Array[Long]]()
     def addToSeg(h: Long): Unit = UrlSeen.addToSegMap(segMap, h, cfg.seenCfg)
-    def orMergeSegs(m: Map[Int, Array[Long]]): Unit =
-      UrlSeen.orMergeInto(segMap, m)
-    var seenCount =
-      if (!driverBloom) seen.count()
-      else if (cfg.bloomImpl == "incremental") {
-        val init = seen.select(col("url_hash")).as[Long].collect()
-        init.foreach(addToSeg)
-        init.length.toLong
-      } else {
-        val n = seen.count()
-        if (cfg.bloomImpl == "auto" && n < cfg.bloomDeltaThreshold)
-          seen.select(col("url_hash")).as[Long].collect().foreach(addToSeg)
-        else if (n > 0)
-          orMergeSegs(UrlSeen.collectSegments(
-            UrlSeen.buildSegments(seen, cfg.seenCfg)))
-        n
-      }
-    // per-wave accumulator choice; "auto" may FLIP incremental→delta as the
-    // crawl grows — both feed the same segMap, so the flip is seamless
-    def waveBloomMode(): String =
-      if (!driverBloom) "none"
-      else if (cfg.bloomImpl == "auto")
-        (if (seenCount < cfg.bloomDeltaThreshold) "incremental" else "delta")
-      else cfg.bloomImpl
+    var seenCount = seen.count()
+    if (seenCount < cfg.bloomDeltaThreshold)
+      seen.select(col("url_hash")).as[Long].collect().foreach(addToSeg)
+    else if (seenCount > 0)
+      UrlSeen.orMergeInto(segMap, UrlSeen.collectSegments(
+        UrlSeen.buildSegments(seen, cfg.seenCfg)))
     var frontierCount = frontier.count()
 
     var wave = startWave
     while (frontierCount > 0 && wave < cfg.maxWaves) {
       val waveStart = wave.toLong * 1000000L
-      // schedulerImpl × robotsImpl dispatch: the scheduler choice (typed
-      // Aggregator top-k vs window twin) is orthogonal to where robots
-      // live (driver map vs broadcast join) — all four combinations
-      // produce the identical wave (SchedulerSpec / CrawlLoopSpec)
-      val sched: Dataset[Scheduled] = (cfg.schedulerImpl, useRobotsJoin) match {
-        case ("sql", true) =>
-          PoliteScheduler.scheduleJoinSql(frontier, robots, waveStart,
-            cfg.scheduler)
-        case (_, true) =>
-          PoliteScheduler.scheduleJoinAgg(frontier, robots, waveStart,
-            cfg.scheduler)
-        case ("sql", false) =>
-          PoliteScheduler.scheduleSql(frontier, robots, waveStart, cfg.scheduler)
-        case _ =>
-          PoliteScheduler.scheduleWithMap(frontier, robotsMap, waveStart,
-            cfg.scheduler)
-      }
+      val sched = PoliteScheduler.scheduleWithMap(frontier, robotsMap,
+        waveStart, cfg.scheduler)
 
       // fetch = equi-join against the pages table (left: missing ⇒ 404).
       // TOP-LEVEL url_hash join keys on both sides, so a bucketed pages
@@ -315,12 +242,8 @@ object CrawlLoop extends Serializable {
             .orderBy("seed", "depth", "pageIdx", "posInPage")))
         .filter(col("rn") === 1).drop("rn")
       val candidates = dedupedLinks.withColumnRenamed("urlHash", "url_hash")
-      val bloomActive = cfg.useBloom && seenCount >= cfg.bloomMinSeen
       val segMapOpt =
-        if (!bloomActive) None
-        else if (driverBloom) Some(segMap.toMap)
-        else Some(UrlSeen.collectSegments(
-          UrlSeen.buildSegments(seen, cfg.seenCfg)))
+        if (seenCount >= cfg.bloomMinSeen) Some(segMap.toMap) else None
       // seen deltas are distinct by construction → seenDistinct = true
       // skips the defensive distinct() shuffle of the whole seen set
       val newEntries = UrlSeen
@@ -351,19 +274,19 @@ object CrawlLoop extends Serializable {
       val nextFrontier = remaining.union(retries).union(newEntries)
 
       // seen delta: this wave's new hashes (+ the seed hashes once, at
-      // wave 0). On the driver-bloom paths the hashes also ride this write
-      // into an accumulator feeding the driver segment map — raw hashes
-      // ("incremental", small crawls) or task-local bloom partials
-      // ("delta": fixed-size segments, no hash reaches the driver).
+      // wave 0). The hashes also ride this write into an accumulator
+      // feeding the driver segment map — raw hashes below
+      // bloomDeltaThreshold, task-local bloom partials at or above it
+      // (fixed-size segments, no hash reaches the driver). Both feed the
+      // same segMap, so the mid-crawl flip is seamless.
       val newHashes = newEntries.select(col("urlHash").as("url_hash"))
       val seenDeltaBase =
         if (wave == 0) seen.select("url_hash").unionByName(newHashes)
         else newHashes
-      val bloomMode = waveBloomMode()
       // each arm allocates only its own accumulator and returns the
       // instrumented delta plus the post-commit absorb step for it
-      val (seenDelta, absorbBloom) = bloomMode match {
-        case "incremental" =>
+      val (seenDelta, absorbBloom) =
+        if (seenCount < cfg.bloomDeltaThreshold) {
           val hashAcc = new org.apache.spark.util.CollectionAccumulator[Long]()
           spark.sparkContext.register(hashAcc, s"seen_hashes_w$wave")
           val df = seenDeltaBase.as[Long]
@@ -373,15 +296,14 @@ object CrawlLoop extends Serializable {
             val it = hashAcc.value.iterator()
             while (it.hasNext) addToSeg(it.next())
           })
-        case "delta" =>
+        } else {
           val segAcc = new UrlSeen.SegmentAccumulator(cfg.seenCfg)
           spark.sparkContext.register(segAcc, s"seen_segments_w$wave")
           val df = seenDeltaBase.as[Long]
             .mapPartitions(it => it.map { h => segAcc.add(h); h })
             .toDF("url_hash")
-          (df, () => orMergeSegs(segAcc.value))
-        case _ => (seenDeltaBase, () => ())
-      }
+          (df, () => UrlSeen.orMergeInto(segMap, segAcc.value))
+        }
 
       val seedCount = if (wave == 0) seenCount else 0L
       var metrics = Map.empty[String, Long]

@@ -3,7 +3,6 @@ package graft.frontier
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.fixtures.SyntheticWeb.Robots
 
 /** The frontier priority queue + per-host politeness scheduler.
   *
@@ -81,22 +80,27 @@ object PoliteScheduler {
     def outputEncoder: Encoder[Seq[FrontierEntry]] = bufferEncoder
   }
 
+  /** Robots admission for one entry: false when its path starts with a
+    * disallow prefix of its host. The one row-side check behind the
+    * crawl loop's admission filter and both schedulers.
+    */
+  def allowed(robots: Map[String, (Seq[String], Long)],
+      e: FrontierEntry): Boolean =
+    robots.get(e.host) match {
+      case Some((prefixes, _)) =>
+        val path = graft.url.UrlCanon.pathOf(e.url)
+        !prefixes.exists(path.startsWith)
+      case None => true
+    }
+
   /** Schedule one wave: robots gating, then per-host budgeted top-k in
     * crawl-rank order, then slot/notBefore assignment.
     *
     * Robots handling (absent in the reference, required by north_rule):
-    * the tiny robots table is broadcast; disallowed path-prefixes are
-    * filtered out (logged upstream), and a host's `crawl_delay_ms`
-    * overrides the default politeness delay.
-    */
-  def schedule(frontier: Dataset[FrontierEntry], robots: Dataset[Robots],
-      waveStartMs: Long, cfg: Config = Config()): Dataset[Scheduled] =
-    scheduleWithMap(frontier,
-      robots.collect().map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap,
-      waveStartMs, cfg)
-
-  /** Same, with the (tiny) robots table already collected — callers that
-    * loop over waves collect it once, not once per wave.
+    * the tiny robots table, collected once per crawl into `robotsMap`, is
+    * broadcast; disallowed path-prefixes are filtered out (logged
+    * upstream), and a host's `crawl_delay_ms` overrides the default
+    * politeness delay.
     */
   def scheduleWithMap(frontier: Dataset[FrontierEntry],
       robotsMap: Map[String, (Seq[String], Long)],
@@ -106,17 +110,9 @@ object PoliteScheduler {
     val bc = spark.sparkContext.broadcast(robotsMap)
     val defaultDelay = cfg.defaultDelayMs
 
-    val allowed = frontier.filter { e =>
-      bc.value.get(e.host) match {
-        case Some((prefixes, _)) =>
-          val path = graft.url.UrlCanon.pathOf(e.url)
-          !prefixes.exists(path.startsWith)
-        case None => true
-      }
-    }
-
     val agg = new TopKByRank(cfg.hostBudget).toColumn
-    allowed
+    frontier
+      .filter(e => allowed(bc.value, e))
       .groupByKey(_.host)
       .agg(agg.name("picked"))
       .flatMap { case (host, picked) =>
@@ -127,130 +123,31 @@ object PoliteScheduler {
       }
   }
 
-  /** Robots ADMISSION as a broadcast join over a FrontierEntry-shaped
-    * frame (the 10^8-host path where a driver-collected robots map would
-    * OOM): keep rows whose path matches no disallow prefix of their host.
-    * The path expression is [[graft.url.UrlCanon.pathCol]] — the single
-    * shared definition with the row-side `pathOf` twin.
-    */
-  def admitJoin(df: org.apache.spark.sql.DataFrame,
-      robots: Dataset[Robots]): org.apache.spark.sql.DataFrame =
-    df.join(broadcast(robots.toDF()
-        .select(col("host"), col("disallow_prefixes"))), Seq("host"), "left")
-      .withColumn("__path", graft.url.UrlCanon.pathCol(col("url")))
-      .filter(col("disallow_prefixes").isNull ||
-        !exists(col("disallow_prefixes"),
-          pre => col("__path").startsWith(pre)))
-      .drop("disallow_prefixes", "__path")
-      .select("url", "urlHash", "host", "kind", "seed", "depth", "pageIdx",
-        "posInPage", "attempts")
-
-  /** Robots-as-a-TABLE twin of [[scheduleWithMap]] (the "agg" scheduler
-    * under `robotsImpl = "join"`): admission via [[admitJoin]], the same
-    * map-side bounded [[TopKByRank]] pick, then per-host crawl delays
-    * joined from the broadcast robots table — robots never transits the
-    * driver AND the hot-host pre-shuffle bound is preserved. Identical
-    * waves to the map variant (SchedulerSpec).
-    */
-  def scheduleJoinAgg(frontier: Dataset[FrontierEntry], robots: Dataset[Robots],
-      waveStartMs: Long, cfg: Config = Config()): Dataset[Scheduled] = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    val allowed = admitJoin(frontier.toDF(), robots).as[FrontierEntry]
-    val agg = new TopKByRank(cfg.hostBudget).toColumn
-    val defaultDelay = cfg.defaultDelayMs
-    allowed
-      .groupByKey(_.host)
-      .agg(agg.name("picked"))
-      .toDF("host", "picked")
-      .join(broadcast(robots.toDF()
-        .select(col("host"), col("crawl_delay_ms"))), Seq("host"), "left")
-      .select(col("picked"),
-        coalesce(col("crawl_delay_ms"), lit(defaultDelay)).as("delay"))
-      .as[(Seq[FrontierEntry], Long)]
-      .flatMap { case (picked, delay) =>
-        picked.zipWithIndex.map { case (e, slot) =>
-          Scheduled(e, slot, waveStartMs + slot * delay)
-        }
-      }
-  }
-
-  /** Robots-as-a-TABLE twin of [[scheduleSql]]: robots gating and crawl
-    * delays come from broadcast joins against the `robots(host, ...)`
-    * Dataset instead of a driver-collected map. This is the 10^8-host
-    * path (north_rule J2/R1): the robots table never transits the driver,
-    * so its size is bounded by executor memory (broadcast) or — drop the
-    * `broadcast` hint — by nothing at all (shuffle join). Produces the
-    * IDENTICAL wave to [[scheduleWithMap]]/[[scheduleSql]] (proven in
-    * SchedulerSpec and CrawlLoopSpec's robots-join run).
-    */
-  def scheduleJoinSql(frontier: Dataset[FrontierEntry], robots: Dataset[Robots],
-      waveStartMs: Long, cfg: Config = Config()): Dataset[Scheduled] = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-
-    val rob = robots.toDF()
-      .select(col("host"), col("disallow_prefixes"), col("crawl_delay_ms"))
-    val allowed = frontier.toDF()
-      .join(broadcast(rob), Seq("host"), "left")
-      .withColumn("__path", graft.url.UrlCanon.pathCol(col("url")))
-      .filter(col("disallow_prefixes").isNull ||
-        !exists(col("disallow_prefixes"),
-          pre => col("__path").startsWith(pre)))
-
-    val w = Window.partitionBy(col("host"))
-      .orderBy(col("seed"), col("depth"), col("pageIdx"), col("posInPage"),
-        col("urlHash"))
-    allowed
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= cfg.hostBudget)
-      .withColumn("slot", (col("rn") - 1).cast("int"))
-      .withColumn("notBefore",
-        lit(waveStartMs) + col("slot").cast("long") *
-          coalesce(col("crawl_delay_ms"), lit(cfg.defaultDelayMs)))
-      .select(
-        struct(col("url"), col("urlHash"), col("host"), col("kind"),
-          col("seed"), col("depth"), col("pageIdx"), col("posInPage"),
-          col("attempts")).as("entry"),
-        col("slot"), col("notBefore"))
-      .as[Scheduled]
-  }
-
-  /** Window-function twin of [[schedule]]: row_number over
+  /** Window-function twin of [[scheduleWithMap]]: row_number over
     * (partitionBy host, orderBy crawl order) ≤ budget, slot/notBefore from
     * the row number. Produces the IDENTICAL wave (SchedulerSpec proves it)
     * but stays entirely in Tungsten rows — no per-host object buffers
-    * through the shuffle — which is what you want when a single wave holds
-    * 10^7+ rows. The typed-Aggregator variant remains the default
-    * (north-rule surface + map-side partial top-k when budget ≪ rows/host).
+    * through the shuffle — which is what an unbounded budget needs, where
+    * the typed Aggregator would buffer each host whole. The crawl loop
+    * uses [[scheduleWithMap]] (map-side partial top-k when budget ≪
+    * rows/host).
     */
-  def scheduleSql(frontier: Dataset[FrontierEntry], robots: Dataset[Robots],
+  def scheduleSql(frontier: Dataset[FrontierEntry],
+      robotsMap: Map[String, (Seq[String], Long)],
       waveStartMs: Long, cfg: Config = Config()): Dataset[Scheduled] = {
     val spark = frontier.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
 
-    val robotsMap: Map[String, (Seq[String], Long)] =
-      robots.collect().map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap
     val bc = spark.sparkContext.broadcast(robotsMap)
     val defaultDelay = cfg.defaultDelayMs
-
-    val allowed = frontier.filter { e =>
-      bc.value.get(e.host) match {
-        case Some((prefixes, _)) =>
-          val p = graft.url.UrlCanon.pathOf(e.url)
-          !prefixes.exists(p.startsWith)
-        case None => true
-      }
-    }
 
     val w = Window.partitionBy(col("host"))
       .orderBy(col("seed"), col("depth"), col("pageIdx"), col("posInPage"),
         col("urlHash"))
     val delayUdf = udf((host: String) =>
       bc.value.get(host).map(_._2).getOrElse(defaultDelay))
-    allowed.toDF()
+    frontier.filter(e => allowed(bc.value, e)).toDF()
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= cfg.hostBudget)
       .withColumn("slot", (col("rn") - 1).cast("int"))

@@ -49,11 +49,11 @@ final case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
   override def prettyName: String = "url_canon"
 }
 
-/** Column twin of [[graft.url.UrlCanon.pathOf]] — calls the SAME row
-  * function from generated code, so the robots admission decision cannot
-  * drift between `robotsImpl = "map"` (row-side pathOf) and `"join"`
-  * (this expression): the earlier regex formulation diverged on uppercase
-  * schemes, embedded newlines, and scheme-less strings containing '://'.
+/** Column twin of [[graft.url.UrlCanon.pathOf]], registered as the SQL
+  * function `url_path` — calls the SAME row function from generated code,
+  * so a SQL path cannot drift from the robots admission check's: the
+  * earlier regex formulation diverged on uppercase schemes, embedded
+  * newlines, and scheme-less strings containing '://'.
   */
 final case class UrlPath(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType

@@ -50,19 +50,27 @@ object CrawlPipelines {
       .orderBy("crawl_rank")
 
   /** §3.2 digest (new.py): per-seed markdown digest, papers concatenated in
-    * crawl order — the K3 ordered-append sink as a groupBy + sorted
-    * aggregation.
+    * crawl order — the K3 ordered-append sink. Only the digest's length is
+    * output, and a concatenation's length is the sum of its parts', so the
+    * per-seed aggregate is a partial-aggregating `sum` rather than a
+    * buffer of every paper's text.
     */
   def digest(s: SparkSession, dir: String): DataFrame =
-    result(s).records
+    digestOf(result(s).records)
+
+  private[operators] def digestOf(records: DataFrame): DataFrame =
+    records
       .filter(col("extracted_md") =!= "")
       .withColumn("seed", shiftright(col("crawl_rank"), 50))
       .groupBy("seed")
-      .agg(count(lit(1)).as("n_papers"),
-        length(concat_ws("", sort_array(
-          collect_list(struct(col("crawl_rank"), col("extracted_md"))))
-          .getField("extracted_md"))).as("digest_len"))
+      .agg(count(lit(1)).as("n_papers"), digestLen)
       .orderBy("seed")
+
+  // concat_ws skips nulls, so its length is the sum over the non-null
+  // texts; an all-null group sums to null where the concatenation was
+  // empty, which listingDigestOf fills with 0 (digestOf drops null texts)
+  private def digestLen =
+    sum(length(col("extracted_md"))).as("digest_len")
 
   /** A1-analogue counts: per-label record counts (the paper_number.csv
     * pivot) — deterministic wide aggregate.
@@ -196,18 +204,17 @@ object CrawlPipelines {
     * `{subject}/{date}.md` with its paper count and body length (K3),
     * plus the A1 counts-row inputs.
     */
-  def listingDigest(s: SparkSession, dir: String): DataFrame = {
-    val r = result(s).records
+  def listingDigest(s: SparkSession, dir: String): DataFrame =
+    listingDigestOf(result(s).records)
+
+  private[operators] def listingDigestOf(r: DataFrame): DataFrame = {
     val listings = r.filter(col("label") === "listing")
       .select(shiftright(col("crawl_rank"), 50).as("seed"),
         col("title").as("date"))
     val papers = r.filter(col("url").startsWith("https://arxiv.org/"))
       .withColumn("seed", shiftright(col("crawl_rank"), 50))
       .groupBy("seed")
-      .agg(count(lit(1)).as("n_papers"),
-        length(concat_ws("", sort_array(
-          collect_list(struct(col("crawl_rank"), col("extracted_md"))))
-          .getField("extracted_md"))).as("digest_len"))
+      .agg(count(lit(1)).as("n_papers"), digestLen)
     listings.join(papers, Seq("seed"), "left")
       .na.fill(0L, Seq("n_papers", "digest_len"))
       .orderBy("seed")

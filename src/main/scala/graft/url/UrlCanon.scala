@@ -147,9 +147,9 @@ object UrlCanon {
     if (url == null) "" else parse(url.trim).host.toLowerCase
 
   /** Path (incl. leading '/') of a URL; "/" when rootless. The SINGLE
-    * definition behind every robots path-prefix match — the column twin
-    * is [[pathCol]]; keeping them adjacent is what keeps the row-side and
-    * join-side robots decisions from drifting.
+    * definition behind every robots path-prefix match
+    * ([[graft.frontier.PoliteScheduler.allowed]]) and behind the
+    * `url_path` SQL function ([[pathCol]]).
     */
   def pathOf(url: String): String = {
     val i = url.indexOf("://")
@@ -158,11 +158,10 @@ object UrlCanon {
     if (j >= 0) rest.substring(j) else "/"
   }
 
-  /** Column twin of [[pathOf]] for the broadcast-join robots path: the
-    * [[graft.functions.UrlPath]] codegen expression, which calls pathOf
-    * itself — ONE definition, so the map- and join-side robots decisions
-    * cannot diverge on any input (an earlier regex twin differed on
-    * uppercase schemes and embedded newlines).
+  /** Column form of [[pathOf]]: the [[graft.functions.UrlPath]] codegen
+    * expression (`url_path`), which calls pathOf itself, so the column and
+    * row results cannot diverge on any input (an earlier regex twin
+    * differed on uppercase schemes and embedded newlines).
     */
   def pathCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.graftshim.ColumnBridge.column(

@@ -49,7 +49,7 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       robots: Map[String, (Seq[String], Long)],
       budget: Int, maxAttempts: Int, maxWaves: Int): SimResult = {
     def allowed(e: FrontierEntry): Boolean = robots.get(e.host) match {
-      case Some((pre, _)) => !pre.exists(CrawlLoop.pathOf(e.url).startsWith)
+      case Some((pre, _)) => !pre.exists(UrlCanon.pathOf(e.url).startsWith)
       case None           => true
     }
     var frontier = seeds.map(s =>
@@ -205,31 +205,6 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(engSeen == sim.seen)
   }
 
-  test("sql (window) scheduler variant produces the identical crawl") {
-    val dir = java.nio.file.Files.createTempDirectory("crawl-sql")
-    val store = new SnapshotStore(dir.toString, spark)
-    val res = CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs, store,
-      crawlCfg.copy(schedulerImpl = "sql"))
-    import spark.implicits._
-    val eng = res.records.as[PageParsers.CrawlRecord]
-      .collect().sortBy(_.crawl_rank).toVector
-    assert(eng == sim.records.sortBy(_.crawl_rank))
-  }
-
-  test("robots-as-a-table (broadcast join) variant produces the identical " +
-    "crawl — the 10^8-host path where robots never transits the driver") {
-    val dir = java.nio.file.Files.createTempDirectory("crawl-robots-join")
-    val store = new SnapshotStore(dir.toString, spark)
-    val res = CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs, store,
-      crawlCfg.copy(robotsImpl = "join"))
-    import spark.implicits._
-    val eng = res.records.as[PageParsers.CrawlRecord]
-      .collect().sortBy(_.crawl_rank).toVector
-    assert(eng == sim.records.sortBy(_.crawl_rank))
-    val engSeen = res.seen.collect().map(_.getLong(0)).toSet
-    assert(engSeen == sim.seen)
-  }
-
   test("bucketed pages table (cfg.pagesTable) produces the identical crawl " +
     "with the html payload never shuffling") {
     graft.sources.BucketedPages.write(spark, pagesDf, "crawl_pages_bucketed",
@@ -245,54 +220,34 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(eng == sim.records.sortBy(_.crawl_rank))
   }
 
-  test("bloom maintenance modes (incremental / delta / perwave / auto with " +
-    "a mid-crawl flip) all produce the identical crawl and seen set") {
+  test("bloom delta threshold 0 and 20 both reproduce the simulator") {
     import spark.implicits._
     val simRecords = sim.records.sortBy(_.crawl_rank)
-    val variants = Seq(
-      "incremental" -> crawlCfg.copy(bloomImpl = "incremental"),
-      "delta" -> crawlCfg.copy(bloomImpl = "delta"),
-      "perwave" -> crawlCfg.copy(bloomImpl = "perwave"),
-      // threshold inside the crawl's seen growth → auto flips
-      // incremental→delta mid-crawl; both feed the same segment map
-      "auto-flip" -> crawlCfg.copy(bloomImpl = "auto",
-        bloomDeltaThreshold = 20L))
-    variants.foreach { case (name, c) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"crawl-bloom-$name")
-      val res = CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs,
-        new SnapshotStore(dir.toString, spark), c)
+    def check(name: String, res: CrawlLoop.Result): Unit = {
       val eng = res.records.as[PageParsers.CrawlRecord]
         .collect().sortBy(_.crawl_rank).toVector
-      assert(eng == simRecords, s"records diverge under bloomImpl=$name")
+      assert(eng == simRecords, s"records diverge: $name")
       assert(res.seen.collect().map(_.getLong(0)).toSet == sim.seen,
-        s"seen set diverges under bloomImpl=$name")
+        s"seen set diverges: $name")
     }
+    def tmpStore(name: String) = new SnapshotStore(
+      java.nio.file.Files.createTempDirectory(name).toString, spark)
 
-    // resume under "delta": the crash-recovery path re-seeds the driver
-    // segment map DISTRIBUTED (buildSegments over the stored seen deltas,
-    // nBuckets-row collect — no hash transits the driver) and must yield
-    // the identical final crawl
-    val rdir = java.nio.file.Files.createTempDirectory("crawl-bloom-resume")
-    val deltaCfg = crawlCfg.copy(bloomImpl = "delta")
-    CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs,
-      new SnapshotStore(rdir.toString, spark), deltaCfg.copy(maxWaves = 2))
-    val resumed = CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs,
-      new SnapshotStore(rdir.toString, spark), deltaCfg)
-    val engR = resumed.records.as[PageParsers.CrawlRecord]
-      .collect().sortBy(_.crawl_rank).toVector
-    assert(engR == simRecords, "records diverge on delta-bloom resume")
-    assert(resumed.seen.collect().map(_.getLong(0)).toSet == sim.seen)
+    // 20 lies inside the crawl's seen growth: the early waves feed the
+    // driver segments raw hashes, the later ones task-built segments
+    check("threshold 20", CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs,
+      tmpStore("crawl-bloom-flip"), crawlCfg.copy(bloomDeltaThreshold = 20L)))
 
-    // a typo'd mode must fail fast: silently matching no maintenance arm
-    // would leave a permanently stale driver bloom whose false negatives
-    // bypass the exact anti-join (duplicate fetches)
-    val e = intercept[IllegalArgumentException] {
-      CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs,
-        new SnapshotStore(java.nio.file.Files
-          .createTempDirectory("crawl-bloom-typo").toString, spark),
-        crawlCfg.copy(bloomImpl = "per-wave"))
-    }
-    assert(e.getMessage.contains("bloomImpl"))
+    // 0: segment partials from wave 0 on. Killed after 2 waves, the resume
+    // re-seeds the driver segments DISTRIBUTED (buildSegments over the
+    // stored seen deltas, nBuckets-row collect — no hash transits the
+    // driver) and must yield the identical final crawl
+    val deltaCfg = crawlCfg.copy(bloomDeltaThreshold = 0L)
+    val store = tmpStore("crawl-bloom-delta")
+    CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs, store,
+      deltaCfg.copy(maxWaves = 2))
+    check("threshold 0, resumed after 2 waves", CrawlLoop.run(spark, pagesDf,
+      seedsDs, robotsDs, new SnapshotStore(store.root, spark), deltaCfg))
   }
 
   test("per-wave metrics come from footers/accumulators and match the " +

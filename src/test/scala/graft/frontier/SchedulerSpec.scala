@@ -26,15 +26,11 @@ class SchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
         "search", i % 3, i % 4, i % 5, i % 11, 0)
     }
 
-  def robots = {
-    import spark.implicits._
-    spark.createDataset(Seq(
-      SyntheticWeb.Robots("h1.example.org", Seq("/p1"), 250L),
-      SyntheticWeb.Robots("h2.example.org", Seq.empty, 500L)))
-  }
+  val robots: Map[String, (Seq[String], Long)] = Map(
+    "h1.example.org" -> ((Seq("/p1"), 250L)),
+    "h2.example.org" -> ((Seq.empty[String], 500L)))
 
-  test("all four scheduler variants (agg/sql × robots map/join) produce " +
-    "the identical wave") {
+  test("scheduleWithMap and scheduleSql produce the identical wave") {
     import spark.implicits._
     val frontier = spark.createDataset(mkFrontier(500))
     for (budget <- Seq(1, 3, 64, 1000)) {
@@ -42,17 +38,11 @@ class SchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
         defaultDelayMs = 1000L)
       def norm(w: Array[Scheduled]) =
         w.map(s => (s.entry, s.slot, s.notBefore)).sortBy(_._1.urlHash).toSeq
-      val a = norm(PoliteScheduler.schedule(frontier, robots, 7000L, cfg)
-        .collect())
+      val a = norm(PoliteScheduler.scheduleWithMap(frontier, robots, 7000L,
+        cfg).collect())
       val b = norm(PoliteScheduler.scheduleSql(frontier, robots, 7000L, cfg)
         .collect())
-      val c = norm(PoliteScheduler.scheduleJoinAgg(frontier, robots, 7000L, cfg)
-        .collect())
-      val d = norm(PoliteScheduler.scheduleJoinSql(frontier, robots, 7000L, cfg)
-        .collect())
       assert(a == b, s"agg vs sql mismatch at budget=$budget")
-      assert(a == c, s"agg vs join-agg mismatch at budget=$budget")
-      assert(a == d, s"agg vs join-sql mismatch at budget=$budget")
     }
   }
 
@@ -61,7 +51,8 @@ class SchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val frontier = spark.createDataset(mkFrontier(500))
     val cfg = PoliteScheduler.Config(hostBudget = 10, defaultDelayMs = 1000L)
-    val wave = PoliteScheduler.schedule(frontier, robots, 0L, cfg).collect()
+    val wave = PoliteScheduler.scheduleWithMap(frontier, robots, 0L, cfg)
+      .collect()
     val byHost = wave.groupBy(_.entry.host)
     byHost.foreach { case (host, rows) =>
       assert(rows.length <= 10)

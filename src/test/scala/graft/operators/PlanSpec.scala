@@ -320,4 +320,44 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("*("), s"no codegen span in:\n$p")
   }
+
+  test("crawl digests (q41/q45): the per-seed digest length is a sum " +
+    "aggregate — no collect_list buffer in either optimized plan; an " +
+    "all-null group reads 0") {
+    import spark.implicits._
+    def rec(seed: Long, url: String, label: String, title: String,
+        md: String, item: Long) =
+      graft.crawl.PageParsers.CrawlRecord(url, label, title, "", md, "",
+        "test", (seed << 50) | item)
+    // seed 1: two texts and an empty one; seed 2: only null texts;
+    // seed 3: a listing without papers; seed 4: a non-arxiv text
+    val records = Seq(
+      rec(1, "https://lists.example.org/1", "listing", "d1", "", 0),
+      rec(1, "https://arxiv.org/abs/1", "", "", "abc", 1),
+      rec(1, "https://arxiv.org/abs/2", "", "", "de", 2),
+      rec(1, "https://arxiv.org/abs/3", "", "", "", 3),
+      rec(2, "https://lists.example.org/2", "listing", "d2", "", 0),
+      rec(2, "https://arxiv.org/abs/4", "", "", null, 1),
+      rec(2, "https://arxiv.org/abs/5", "", "", null, 2),
+      rec(3, "https://lists.example.org/3", "listing", "d3", "", 0),
+      rec(4, "https://blog.example.org/a", "", "", "xyz", 1)
+    ).toDS().toDF()
+    val q41 = CrawlPipelines.digestOf(records)
+    val q45 = CrawlPipelines.listingDigestOf(records)
+    for ((name, df) <- Seq("q41" -> q41, "q45" -> q45)) {
+      val lp = df.queryExecution.optimizedPlan
+      assert(!lp.toString.contains("collect_list"),
+        s"$name buffers texts in a collect_list:\n$lp")
+      assert(lp.exists {
+        case a: Aggregate =>
+          a.aggregateExpressions.exists(_.toString.contains("sum(length("))
+        case _ => false
+      }, s"$name has no sum(length) aggregate:\n$lp")
+    }
+    assert(q41.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq == Seq((1L, 2L, 5L), (4L, 1L, 3L)))
+    assert(q45.collect().map(r => (r.getLong(0), r.getString(1),
+      r.getLong(2), r.getLong(3))).toSeq ==
+      Seq((1L, "d1", 3L, 5L), (2L, "d2", 2L, 0L), (3L, "d3", 0L, 0L)))
+  }
 }
