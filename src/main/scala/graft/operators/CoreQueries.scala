@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** Relational operators from the reference, re-expressed Spark-first over
-  * the driver testdata tables, each paired with a DuckDB oracle in
-  * [[graft.SparkEntry.oracleSql]].
+  * the driver testdata tables, each paired with a DuckDB oracle in its
+  * [[graft.SparkEntry.registry]] entry.
   *
   * Scale notes (100 TB design point):
   *   - aggregations are plain `groupBy` → hash-aggregate with map-side

@@ -168,26 +168,12 @@ object UrlSeen {
       .agg(agg(col("url_hash")).as("sketch"))
   }
 
-  /** Bloom pre-filter: drop candidates definitely not in `segments`.
-    *
-    * The segment table is tiny (nBuckets rows), so it is collected once
-    * and broadcast as a deserialized `Map[bucket → long-words]`; the probe
-    * is then a pure per-row function over the broadcast — no join, no
-    * per-row `fromBytes` copy of the 8 KiB sketch (the naive
-    * broadcast-join formulation deserializes the sketch for EVERY
-    * candidate row). A bucket absent from the map was never built ⇒ the
-    * candidate is definitely unseen.
-    */
   /** Collect a built segment table into the driver-side probe map. */
   def collectSegments(segments: DataFrame): Map[Int, Array[Long]] =
     segments.collect().map { r =>
       r.getAs[Long]("bucket").toInt ->
         Bloom.fromBytes(r.getAs[Array[Byte]]("sketch"))
     }.toMap
-
-  def mightBeSeen(candidates: DataFrame, segments: DataFrame,
-      cfg: Config = Config()): DataFrame =
-    mightBeSeenWithMap(candidates, collectSegments(segments), cfg)
 
   /** Row-side probe kernel (also called from [[BloomMightContain]]'s
     * generated code): bucket lookup + double-hash membership. A bucket
@@ -202,10 +188,9 @@ object UrlSeen {
     }
   }
 
-  /** Probe against an already-collected segment map (the incremental /
-    * delta driver-maintained paths — the crawl loop feeds the map via an
-    * accumulator riding the seen-delta write, so NO bloom build job ever
-    * runs). The probe is the [[BloomMightContain]] codegen expression over
+  /** Probe against an already-collected segment map (the crawl loop
+    * maintains its map on the driver, fed by an accumulator riding the
+    * seen-delta write, so NO bloom build job ever runs). The probe is the [[BloomMightContain]] codegen expression over
     * a broadcast of the map — on the hot candidate path a boxed Scala UDF
     * would break the codegen span every wave.
     */
@@ -224,12 +209,6 @@ object UrlSeen {
     * at 10^10 keys the distinct is a full extra shuffle of the seen set
     * every wave.
     */
-  def filterUnseen(candidates: DataFrame, exactSeen: DataFrame,
-      segments: Option[DataFrame], cfg: Config = Config(),
-      seenDistinct: Boolean = false): DataFrame =
-    filterUnseenWithMap(candidates, exactSeen, segments.map(collectSegments),
-      cfg, seenDistinct)
-
   def filterUnseenWithMap(candidates: DataFrame, exactSeen: DataFrame,
       segMap: Option[Map[Int, Array[Long]]], cfg: Config = Config(),
       seenDistinct: Boolean = false): DataFrame = {

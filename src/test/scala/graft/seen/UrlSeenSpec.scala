@@ -34,8 +34,8 @@ class UrlSeenSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cfg = UrlSeen.Config(nBuckets = 16, bitsPerSegment = 1 << 12, k = 5)
     val hashes = (1L to 5000L).map(i => i * 0x9E3779B97F4A7C15L)
     val seen = hashes.toDF("url_hash")
-    val segments = UrlSeen.buildSegments(seen, cfg)
-    val flagged = UrlSeen.mightBeSeen(seen, segments, cfg)
+    val segMap = UrlSeen.collectSegments(UrlSeen.buildSegments(seen, cfg))
+    val flagged = UrlSeen.mightBeSeenWithMap(seen, segMap, cfg)
     assert(flagged.filter(!col("might_seen")).count() == 0)
   }
 
@@ -46,10 +46,11 @@ class UrlSeenSpec extends AnyFunSuite with BeforeAndAfterAll {
     val seen = (1L to 2000L).map(_ * 31L).toDF("url_hash")
     val candidates = (1L to 4000L).map(_ * 31L).toDF("url_hash")
       .withColumn("payload", col("url_hash") * 2)
-    val segments = UrlSeen.buildSegments(seen, cfg)
-    val withBloom = UrlSeen.filterUnseen(candidates, seen, Some(segments), cfg)
+    val segMap = UrlSeen.collectSegments(UrlSeen.buildSegments(seen, cfg))
+    val withBloom = UrlSeen
+      .filterUnseenWithMap(candidates, seen, Some(segMap), cfg)
       .select("url_hash").as[Long].collect().toSet
-    val noBloom = UrlSeen.filterUnseen(candidates, seen, None, cfg)
+    val noBloom = UrlSeen.filterUnseenWithMap(candidates, seen, None, cfg)
       .select("url_hash").as[Long].collect().toSet
     assert(withBloom == noBloom)
     assert(withBloom == (2001L to 4000L).map(_ * 31L).toSet)
@@ -112,8 +113,8 @@ class UrlSeenSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cfg = UrlSeen.Config(nBuckets = 4, bitsPerSegment = 1 << 16, k = 5)
     val seen = (1L to 16384L).map(i => i * 0x9E3779B97F4A7C15L + 7L).toDF("url_hash")
     val probe = (1L to 20000L).map(i => i * 0xDEADBEEF123L).toDF("url_hash")
-    val segments = UrlSeen.buildSegments(seen, cfg)
-    val fp = UrlSeen.mightBeSeen(probe, segments, cfg)
+    val segMap = UrlSeen.collectSegments(UrlSeen.buildSegments(seen, cfg))
+    val fp = UrlSeen.mightBeSeenWithMap(probe, segMap, cfg)
       .filter(col("might_seen")).count()
     assert(fp < 400, s"false-positive count $fp too high") // < 2 %
   }
