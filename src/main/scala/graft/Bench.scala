@@ -13,7 +13,7 @@ import graft.sources.BucketedPages
   * Two crawl measurements:
   *   - `crawl_end_to_end`: the full wave loop (snapshots, bloom, retries)
   *     over a bucketed pages table — the honest sandbox-scale number;
-  *     four snapshot writes per wave (~16–17 Spark jobs, see CrawlLoop
+  *     four snapshot writes per wave (~12 Spark jobs, see CrawlLoop
   *     scaladoc), a fixed cost that amortizes at real wave sizes.
   *   - `wave_urls_per_sec @ local[2/8/32]`: the wave INNER pipeline
   *     (politeness schedule → bucketed fetch join → parse+extract →
@@ -279,7 +279,7 @@ object Bench {
 
     // ---- phase 2: end-to-end crawl loop ---------------------------------
     // larger waves than the test config: per-wave overhead (four snapshot
-    // writes, ~16–17 Spark jobs) amortizes over ~4k fetches/wave, which is
+    // writes, ~12 Spark jobs) amortizes over ~4k fetches/wave, which is
     // the shape real waves have; pages come from a bucketed table as they
     // would at scale
     val webCfg = SyntheticWeb.Config(seed = 7L, nHosts = 48,

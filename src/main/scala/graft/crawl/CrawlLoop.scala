@@ -1,8 +1,9 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.fixtures.SyntheticWeb.{Robots, Seed}
 import graft.frontier.{FrontierEntry, PoliteScheduler, Scheduled}
 import graft.seen.UrlSeen
@@ -27,11 +28,16 @@ import graft.url.UrlCanon
   *   - FOUR actions per wave — the four snapshot writes (fetch_log,
   *     records, frontier, seen delta). Spark splits each into several jobs
   *     (AQE query stages, broadcasts): perfbench's traced crawl_deep runs
-  *     read 16-17 jobs per wave on 4 cores. No action is a metric: all
-  *     count metrics (scheduled / records / new_links and the loop's own
-  *     frontier-count termination check) come from the written Parquet
+  *     read 12 jobs per wave (`crawl.jobs_per_wave`) on 4 cores. No action
+  *     is a metric: all count metrics (scheduled / records / new_links,
+  *     the loop's own frontier-count termination check, and a resume's
+  *     starting seen and frontier counts) come from the written Parquet
   *     FOOTERS (driver-side metadata, no job — [[SnapshotStore.rowCount]]);
   *     fetched_ok / retries ride the fetch_log write as accumulators;
+  *   - reloads start no job: the frontier, the seen deltas and the
+  *     returned records / fetch_log are read back with the schema they
+  *     were written with, so Spark plans each read on the driver instead
+  *     of running its schema-inference job per path ([[readTables]]);
   *   - the SEEN table is append-only deltas (`seen_w*`), never a rewrite
   *     of the full set: at 10^10 URLs rewriting seen every wave is
   *     O(crawl²) I/O. Readers union the deltas, which are distinct by
@@ -147,22 +153,24 @@ object CrawlLoop extends Serializable {
         .cache()
     }
 
-    // resume (north_rule): pick up from the last committed snapshot
-    val (startWave, frontier0) = store.head match {
-      case Some(snap) =>
-        (snap.wave + 1, store.table(snap, "frontier").get.as[FrontierEntry])
+    def readFrontier(snap: store.Snapshot): Dataset[FrontierEntry] =
+      readTables(spark, Seq(snap.tables("frontier")), FrontierSchema)
+        .as[FrontierEntry]
+
+    // resume (north_rule): pick up from the last committed snapshot, with
+    // its counts from the Parquet footers (the seen deltas are distinct by
+    // construction, so their row counts sum to the seen-set size)
+    val head = store.head
+    val startWave = head.fold(0)(_.wave + 1)
+    var frontier = head match {
+      case Some(snap) => readFrontier(snap)
       case None =>
-        (0, admit(seeds.map(s => entryOf(s.url, s.site, s.seed_id, 0, 0, 0))))
+        admit(seeds.map(s => entryOf(s.url, s.site, s.seed_id, 0, 0, 0)))
     }
-
-    def seenUnion(): DataFrame = readDeltas(spark, store, "seen_w",
-      spark.range(0).select(col("id").as("url_hash")))
-
-    var frontier = frontier0
     var seen: DataFrame =
-      if (startWave == 0)
-        frontier0.select(col("urlHash").as("url_hash")).distinct().toDF()
-      else seenUnion()
+      if (head.isEmpty)
+        frontier.select(col("urlHash").as("url_hash")).distinct().toDF()
+      else seenUnion(spark, store)
 
     // driver-side Bloom segment map, seeded ONCE per crawl from the
     // starting seen set: small starts collect the hashes (one job); large
@@ -171,13 +179,16 @@ object CrawlLoop extends Serializable {
     // a hash
     val segMap = scala.collection.mutable.Map[Int, Array[Long]]()
     def addToSeg(h: Long): Unit = UrlSeen.addToSegMap(segMap, h, cfg.seenCfg)
-    var seenCount = seen.count()
+    var seenCount =
+      if (head.isEmpty) seen.count()
+      else deltaPaths(store, "seen_w").map(store.rowCount).sum
     if (seenCount < cfg.bloomDeltaThreshold)
       seen.select(col("url_hash")).as[Long].collect().foreach(addToSeg)
     else if (seenCount > 0)
       UrlSeen.orMergeInto(segMap, UrlSeen.collectSegments(
         UrlSeen.buildSegments(seen, cfg.seenCfg)))
-    var frontierCount = frontier.count()
+    var frontierCount =
+      head.fold(frontier.count())(store.tableRowCount(_, "frontier"))
 
     var wave = startWave
     while (frontierCount > 0 && wave < cfg.maxWaves) {
@@ -332,8 +343,8 @@ object CrawlLoop extends Serializable {
 
       // reload state from the committed snapshot: truncates lineage so
       // wave N+1's plan is independent of wave N's
-      frontier = store.table(snap, "frontier").get.as[FrontierEntry]
-      seen = seenUnion()
+      frontier = readFrontier(snap)
+      seen = seenUnion(spark, store)
       frontierCount = store.tableRowCount(snap, "frontier")
       seenCount += metrics("new_links")
       fetched.unpersist()
@@ -343,26 +354,50 @@ object CrawlLoop extends Serializable {
     }
 
     if (cfg.pagesTable.isEmpty) pagesKeyed.unpersist()
-    // typed empty fallbacks: a crawl where no wave ever committed (all
-    // seeds robots-disallowed, maxWaves = 0) must still return frames
-    // with the documented schemas, not a column-less emptyDataFrame
-    Result(
-      readDeltas(spark, store, "records_w",
-        spark.emptyDataset[PageParsers.CrawlRecord].toDF()),
-      readDeltas(spark, store, "fetch_log_w",
-        spark.emptyDataset[FetchLogRow].toDF()),
-      seenUnion(),
-      wave)
+    result(spark, store, wave)
   }
 
-  /** Union all per-wave delta tables recorded across snapshots. */
-  private def readDeltas(spark: SparkSession, store: SnapshotStore,
-      prefix: String, empty: => DataFrame): DataFrame = {
-    val paths = store.snapshots.flatMap { id =>
-      val snap = store.readManifest(id)
-      snap.tables.collect { case (name, path) if name.startsWith(prefix) => path }
+  // the schemas the loop writes its tables with (Dataset encoders, and
+  // the seen deltas' single bigint column); reads pass them back
+  private val FrontierSchema = Encoders.product[FrontierEntry].schema
+  private val RecordSchema = Encoders.product[PageParsers.CrawlRecord].schema
+  private val FetchLogSchema = Encoders.product[FetchLogRow].schema
+  private val SeenSchema = StructType(Seq(StructField("url_hash", LongType)))
+
+  /** The crawl's output over every committed wave of `store`. */
+  private[crawl] def result(spark: SparkSession, store: SnapshotStore,
+      waves: Int): Result = Result(
+    readTables(spark, deltaPaths(store, "records_w"), RecordSchema),
+    readTables(spark, deltaPaths(store, "fetch_log_w"), FetchLogSchema),
+    seenUnion(spark, store),
+    waves)
+
+  private def seenUnion(spark: SparkSession,
+      store: SnapshotStore): DataFrame =
+    readTables(spark, deltaPaths(store, "seen_w"), SeenSchema)
+
+  /** Union, in `paths` order, of tables this loop wrote with `schema`.
+    * Passing the written schema plans every read on the driver alone:
+    * `spark.read.parquet` without one starts a Spark job per path to infer
+    * it. One scan per path, not one multi-path scan: the union keeps wave
+    * order, while a multi-path scan orders its files by size, and readers
+    * that stable-sort records by `crawl_rank` meet ties (blog pages at
+    * depth ≥ 2 share a rank) that only wave order breaks. No path (no
+    * wave committed: all seeds robots-disallowed, or maxWaves = 0) gives
+    * an empty frame of the same schema, not a column-less emptyDataFrame.
+    */
+  private def readTables(spark: SparkSession, paths: Seq[String],
+      schema: StructType): DataFrame =
+    paths.map(spark.read.schema(schema).parquet(_))
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), schema))
+
+  /** Paths of every per-wave delta table named `prefix*`, oldest first. */
+  private def deltaPaths(store: SnapshotStore, prefix: String): Seq[String] =
+    store.snapshots.flatMap { id =>
+      store.readManifest(id).tables.collect {
+        case (name, path) if name.startsWith(prefix) => path
+      }
     }.distinct
-    paths.map(spark.read.parquet(_)).reduceOption(_ unionByName _)
-      .getOrElse(empty)
-  }
 }

@@ -125,6 +125,10 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return 0L
+    // read options from the conf in hand: ParquetFileReader.open(file)
+    // alone builds a fresh Configuration (re-parsing the default XML) per
+    // footer
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val it = fs.listStatus(dir).iterator
     var total = 0L
     while (it.hasNext) {
@@ -132,7 +136,7 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
         try total += r.getRecordCount
         finally r.close()
       }

@@ -279,4 +279,85 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(a == b)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  test("reloading a committed crawl starts no Spark job and keeps the " +
+    "schemas Spark infers from the written files") {
+    val store = new SnapshotStore(java.nio.file.Files
+      .createTempDirectory("crawl-reload").toString, spark)
+    CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs, store,
+      crawlCfg.copy(maxWaves = 3))
+    assert(store.snapshots.size == 3)
+
+    val sc = spark.sparkContext
+    val group = "crawl-reload"
+    sc.setJobGroup(group, "seen union and result frames")
+    val res =
+      try CrawlLoop.result(spark, store, 3)
+      finally sc.clearJobGroup()
+    org.apache.spark.graftshim.ListenerBridge.drain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+
+    def written(prefix: String): Seq[String] = store.snapshots
+      .flatMap(id => store.readManifest(id).tables.toSeq)
+      .collect { case (name, path) if name.startsWith(prefix) => path }
+    def columns(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    Seq("records_w" -> res.records, "fetch_log_w" -> res.fetchLog,
+      "seen_w" -> res.seen).foreach { case (prefix, df) =>
+      val paths = written(prefix)
+      assert(paths.size == 3, prefix)
+      assert(columns(df) == columns(spark.read.parquet(paths: _*)), prefix)
+    }
+    val hashes = written("seen_w")
+      .flatMap(p => spark.read.parquet(p).collect().map(_.getLong(0)))
+    assert(hashes.nonEmpty)
+    assert(res.seen.collect().map(_.getLong(0)).sorted.toSeq == hashes.sorted)
+  }
+
+  test("a URL re-discovered waves after it was first seen is fetched " +
+    "once, as in the simulator, with either bloom feed") {
+    import spark.implicits._
+    // start → {a, b} (wave 0); a → c, b → start (wave 1); c → start, a, d
+    // (wave 2); d → c, b (wave 3): waves 2 and 3 link back to URLs first
+    // seen in waves 0 and 1, so only the union of every seen delta, and
+    // bloom segments holding every earlier wave's hashes, keep them out of
+    // the frontier
+    def url(p: String) = s"https://loop.example.org/$p"
+    val links = Map(
+      "start" -> Seq("a", "b"), "a" -> Seq("c"), "b" -> Seq("start"),
+      "c" -> Seq("start", "a", "d"), "d" -> Seq("c", "b"))
+    val web = links.map { case (p, out) =>
+      val anchors = out.map(o => s"""<li><a href="/$o">$o</a></li>""")
+      url(p) -> s"""<html><body><div class="b_con"><h1>page $p</h1>
+        |<ul>${anchors.mkString}</ul></div></body></html>""".stripMargin
+    }
+    val pages = web.toSeq.map { case (u, h) => (u, h.getBytes("UTF-8")) }
+      .toDF("url", "html")
+    val seeds = Seq(SyntheticWeb.Seed(0, url("start"), "blog", "")).toDS()
+    val robots = spark.emptyDataset[SyntheticWeb.Robots]
+    val simRes = simulate(web.map { case (u, h) => CrawlLoop.hash64(u) -> h },
+      seeds.collect().toSeq, Map.empty, crawlCfg.scheduler.hostBudget,
+      crawlCfg.maxAttempts, crawlCfg.maxWaves)
+
+    // the default threshold feeds the segments raw hashes, 0 task-built
+    // segment partials
+    Seq(crawlCfg.bloomDeltaThreshold, 0L).foreach { threshold =>
+      val res = CrawlLoop.run(spark, pages, seeds, robots,
+        new SnapshotStore(java.nio.file.Files
+          .createTempDirectory("crawl-rediscover").toString, spark),
+        crawlCfg.copy(bloomDeltaThreshold = threshold))
+      val eng = res.records.as[PageParsers.CrawlRecord]
+        .collect().sortBy(_.crawl_rank).toVector
+      assert(eng == simRes.records.sortBy(_.crawl_rank), threshold)
+      assert(res.seen.collect().map(_.getLong(0)).toSet == simRes.seen,
+        threshold)
+
+      val fetchWave = res.fetchLog.collect()
+        .map(r => r.getAs[Long]("url_hash") -> r.getAs[Int]("wave"))
+      val fetches = fetchWave.groupBy(_._1).view.mapValues(_.length).toMap
+      assert(fetches == web.keys.map(u => CrawlLoop.hash64(u) -> 1).toMap,
+        threshold)
+      assert(res.waves == 4 && fetchWave.map(_._2).max == 3, threshold)
+    }
+  }
 }
