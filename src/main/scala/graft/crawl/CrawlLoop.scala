@@ -33,16 +33,33 @@ import graft.url.UrlCanon
   *     the loop's own frontier-count termination check, and a resume's
   *     starting seen and frontier counts) come from the written Parquet
   *     FOOTERS (driver-side metadata, no job — [[SnapshotStore.rowCount]]);
-  *     fetched_ok / retries ride the fetch_log write as accumulators;
+  *     fetched_ok / retries ride the fetch_log write as accumulators; the
+  *     manifest adds driver times: `plan_ms` (loop top to the first
+  *     write) and the store's `<table>_write_ms` per write;
   *   - reloads start no job: the frontier, the seen deltas and the
   *     returned records / fetch_log are read back with the schema they
   *     were written with, so Spark plans each read on the driver instead
   *     of running its schema-inference job per path ([[readTables]]);
+  *   - commits fork no process: the store writes through
+  *     [[graft.store.ForklessLocalFileSystem]], which sets file modes with
+  *     `java.nio` where Hadoop without libhadoop forks `chmod` per file
+  *     and directory;
+  *   - steady waves reuse compiled code: every wave after the first
+  *     plans the same physical shape — the seen deltas are read as ONE
+  *     multi-path scan ([[seenUnion]]), not a union that grows a scan per
+  *     wave, and the fetch_log's wave number rides a closure, not a
+  *     literal — so its generated code is byte-identical to the previous
+  *     wave's and Spark's codegen cache serves it without a compile. Two
+  *     limits: the cache (`spark.sql.codegen.cache.maxEntries`, default
+  *     100 in 4 LRU segments) must hold a steady wave's ~70 classes, which
+  *     the default does in most JVMs but not all; and once the bloom probe
+  *     is on, AQE may number its two branches over one shuffle in either
+  *     order, so each order compiles once;
   *   - the SEEN table is append-only deltas (`seen_w*`), never a rewrite
   *     of the full set: at 10^10 URLs rewriting seen every wave is
-  *     O(crawl²) I/O. Readers union the deltas, which are distinct by
-  *     construction (every delta row passed that wave's unseen filter), so
-  *     the anti-join runs with NO defensive distinct() shuffle;
+  *     O(crawl²) I/O. Readers scan the deltas as one table; they are
+  *     distinct by construction (every delta row passed that wave's unseen
+  *     filter), so the anti-join runs with NO defensive distinct() shuffle;
   *   - `cfg.pagesTable` points the fetch join at a
   *     [[graft.sources.BucketedPages]] table bucketed+sorted by
   *     `url_hash`: the pages side is read pre-partitioned (NO Exchange, NO
@@ -70,9 +87,10 @@ import graft.url.UrlCanon
   * ADMISSION filter: a disallowed URL never enters the frontier (otherwise
   * it would sit there unscheduled forever); crawl delays come from the
   * robots table at schedule time. Robots are collected once per crawl
-  * into a broadcast map: a broadcast-join twin, measured on perfbench's
-  * crawl_deep (4 vCPUs), gave identical crawls at +32% driver heap and
-  * -8% throughput.
+  * into ONE broadcast map that serves both admission and every wave's
+  * schedule: a broadcast-join twin, measured on perfbench's crawl_deep
+  * (4 vCPUs), gave identical crawls at +32% driver heap and -8%
+  * throughput.
   */
 object CrawlLoop extends Serializable {
 
@@ -134,9 +152,9 @@ object CrawlLoop extends Serializable {
       cfg: Config = Config()): Result = {
     import spark.implicits._
 
-    val robotsMap: Map[String, (Seq[String], Long)] = robots.collect()
-      .map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap
-    val bcRobots = spark.sparkContext.broadcast(robotsMap)
+    // one broadcast per crawl, shared by admission and every schedule
+    val bcRobots = spark.sparkContext.broadcast(robots.collect()
+      .map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap)
     def admit(df: Dataset[FrontierEntry]): Dataset[FrontierEntry] =
       df.filter(e => PoliteScheduler.allowed(bcRobots.value, e))
 
@@ -192,8 +210,10 @@ object CrawlLoop extends Serializable {
 
     var wave = startWave
     while (frontierCount > 0 && wave < cfg.maxWaves) {
+      val waveT0 = System.nanoTime()
+      val thisWave = wave
       val waveStart = wave.toLong * 1000000L
-      val sched = PoliteScheduler.scheduleWithMap(frontier, robotsMap,
+      val sched = PoliteScheduler.scheduleWithMap(frontier, bcRobots,
         waveStart, cfg.scheduler)
 
       // fetch = equi-join against the pages table (left: missing ⇒ 404).
@@ -217,6 +237,9 @@ object CrawlLoop extends Serializable {
       // fetched_ok / retries ride the fetch_log write (job 1, the action
       // that also materializes the `fetched` cache) as accumulators —
       // no count() jobs. Diagnostic-only: a task retry could inflate them.
+      // The wave number rides the closure, not a `lit(wave)` column: a
+      // literal is compiled into the serializer's generated code, so every
+      // wave would compile a new class.
       val okAcc = spark.sparkContext.longAccumulator(s"fetched_ok_w$wave")
       val retryAcc = spark.sparkContext.longAccumulator(s"retries_w$wave")
       val maxAttempts = cfg.maxAttempts
@@ -229,11 +252,10 @@ object CrawlLoop extends Serializable {
             if (status == 200) okAcc.add(1L)
             else if (status == 503 && s.entry.attempts + 1 < maxAttempts)
               retryAcc.add(1L)
-            FetchLogRow(s.entry.urlHash, s.entry.host, 0, s.entry.attempts,
-              status, s.slot, s.notBefore, pid)
+            FetchLogRow(s.entry.urlHash, s.entry.host, thisWave,
+              s.entry.attempts, status, s.slot, s.notBefore, pid)
           }
         }.toDF()
-        .withColumn("wave", lit(wave))
 
       val parsed = fetched.filter(col("status") === 200)
         .select(col("sched.entry").as("_1"), col("html").as("_2"))
@@ -318,6 +340,7 @@ object CrawlLoop extends Serializable {
 
       val seedCount = if (wave == 0) seenCount else 0L
       var metrics = Map.empty[String, Long]
+      val planMs = (System.nanoTime() - waveT0) / 1000000L
       val snap = store.commitWith(wave, Seq(
         s"fetch_log_w$wave" -> fetchLogDelta, // job 1: caches fetched + accs
         s"records_w$wave" -> recordsDelta, // job 2: caches parsed
@@ -334,7 +357,9 @@ object CrawlLoop extends Serializable {
           "fetched_ok_approx" -> okAcc.value.toLong,
           "records" -> store.rowCount(written(s"records_w$wave")),
           "new_links" -> (store.rowCount(written(s"seen_w$wave")) - seedCount),
-          "retries_approx" -> retryAcc.value.toLong
+          "retries_approx" -> retryAcc.value.toLong,
+          // driver time from the loop top to the first write
+          "plan_ms" -> planMs
         )
         metrics
       })
@@ -372,26 +397,39 @@ object CrawlLoop extends Serializable {
     seenUnion(spark, store),
     waves)
 
+  /** Every seen delta as ONE multi-path scan. The seen set is a set, so
+    * the file order a multi-path scan picks does not matter; what does is
+    * that the plan keeps one shape however many waves have committed: a
+    * per-wave union would add a scan per wave, renumber every later
+    * whole-stage-codegen stage and make each wave compile its classes
+    * anew.
+    */
   private def seenUnion(spark: SparkSession,
       store: SnapshotStore): DataFrame =
-    readTables(spark, deltaPaths(store, "seen_w"), SeenSchema)
+    deltaPaths(store, "seen_w") match {
+      case Seq() => emptyFrame(spark, SeenSchema)
+      case paths => spark.read.schema(SeenSchema).parquet(paths: _*)
+    }
 
   /** Union, in `paths` order, of tables this loop wrote with `schema`.
     * Passing the written schema plans every read on the driver alone:
     * `spark.read.parquet` without one starts a Spark job per path to infer
-    * it. One scan per path, not one multi-path scan: the union keeps wave
-    * order, while a multi-path scan orders its files by size, and readers
-    * that stable-sort records by `crawl_rank` meet ties (blog pages at
-    * depth ≥ 2 share a rank) that only wave order breaks. No path (no
-    * wave committed: all seeds robots-disallowed, or maxWaves = 0) gives
-    * an empty frame of the same schema, not a column-less emptyDataFrame.
+    * it. One scan per path where order matters (records, fetch_log): the
+    * union keeps wave order, while a multi-path scan orders its files by
+    * size, and readers that stable-sort records by `crawl_rank` meet ties
+    * (blog pages at depth ≥ 2 share a rank) that only wave order breaks.
+    * No path (no wave committed: all seeds robots-disallowed, or
+    * maxWaves = 0) gives an empty frame of the same schema, not a
+    * column-less emptyDataFrame.
     */
   private def readTables(spark: SparkSession, paths: Seq[String],
       schema: StructType): DataFrame =
     paths.map(spark.read.schema(schema).parquet(_))
       .reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), schema))
+      .getOrElse(emptyFrame(spark, schema))
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Paths of every per-wave delta table named `prefix*`, oldest first. */
   private def deltaPaths(store: SnapshotStore, prefix: String): Seq[String] =

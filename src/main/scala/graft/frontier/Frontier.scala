@@ -1,5 +1,6 @@
 package graft.frontier
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -97,31 +98,42 @@ object PoliteScheduler {
     * crawl-rank order, then slot/notBefore assignment.
     *
     * Robots handling (absent in the reference, required by north_rule):
-    * the tiny robots table, collected once per crawl into `robotsMap`, is
-    * broadcast; disallowed path-prefixes are filtered out (logged
-    * upstream), and a host's `crawl_delay_ms` overrides the default
-    * politeness delay.
+    * the tiny robots table, collected once per crawl into a map, arrives
+    * as the caller's broadcast — the crawl loop broadcasts it once per
+    * crawl and shares it between admission and every wave's schedule;
+    * disallowed path-prefixes are filtered out (logged upstream), and a
+    * host's `crawl_delay_ms` overrides the default politeness delay.
     */
   def scheduleWithMap(frontier: Dataset[FrontierEntry],
-      robotsMap: Map[String, (Seq[String], Long)],
+      robots: Broadcast[Map[String, (Seq[String], Long)]],
       waveStartMs: Long, cfg: Config = Config()): Dataset[Scheduled] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(robotsMap)
     val defaultDelay = cfg.defaultDelayMs
 
     val agg = new TopKByRank(cfg.hostBudget).toColumn
     frontier
-      .filter(e => allowed(bc.value, e))
+      .filter(e => allowed(robots.value, e))
       .groupByKey(_.host)
       .agg(agg.name("picked"))
       .flatMap { case (host, picked) =>
-        val delay = bc.value.get(host).map(_._2).getOrElse(defaultDelay)
+        val delay = robots.value.get(host).map(_._2).getOrElse(defaultDelay)
         picked.zipWithIndex.map { case (e, slot) =>
           Scheduled(e, slot, waveStartMs + slot * delay)
         }
       }
   }
+
+  /** One-shot form of [[scheduleWithMap]]: broadcasts `robotsMap` for this
+    * single schedule (a bench layer, a spec). A loop scheduling wave after
+    * wave passes one broadcast instead.
+    */
+  def scheduleWithMap(frontier: Dataset[FrontierEntry],
+      robotsMap: Map[String, (Seq[String], Long)],
+      waveStartMs: Long, cfg: Config): Dataset[Scheduled] =
+    scheduleWithMap(frontier,
+      frontier.sparkSession.sparkContext.broadcast(robotsMap), waveStartMs,
+      cfg)
 
   /** Window-function twin of [[scheduleWithMap]]: row_number over
     * (partitionBy host, orderBy crawl order) ≤ budget, slot/notBefore from

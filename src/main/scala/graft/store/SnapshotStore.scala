@@ -1,7 +1,9 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot store: immutable Parquet data files under an
   * atomically-committed JSON manifest (snapshot id, parent id, per-table
@@ -19,17 +21,32 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * A crash between any two steps leaves HEAD at the parent snapshot —
   * every frontier iteration is resumable from the last committed snapshot
   * (north_rule). Orphaned data dirs from uncommitted snapshots are ignored
-  * by readers and cleaned opportunistically.
+  * by readers (no manifest names them), and the next commit of that
+  * snapshot id overwrites the orphan dir in place (`mode("overwrite")`).
+  *
+  * Writes go through [[ForklessLocalFileSystem]], registered under its own
+  * scheme in the session's Hadoop conf: it sets each new file's and
+  * directory's mode with `java.nio` instead of forking `chmod`, and still
+  * writes the `.crc` checksums. Manifests record plain paths, so every
+  * reader opens the written files through `file:`. Each table's write
+  * time (driver wall clock) lands in the manifest metrics as
+  * `<table>_write_ms`.
   *
   * At cluster scale the same layout lands on an object store: Parquet data
   * files are written by executors (distributed), only the tiny manifest
   * JSON passes through the driver.
   */
-final class SnapshotStore(val root: String, spark: SparkSession) {
+class SnapshotStore(val root: String, spark: SparkSession) {
 
-  private val rootPath = Paths.get(root)
+  private val rootPath = Paths.get(root).toAbsolutePath
   Files.createDirectories(rootPath)
+  spark.sparkContext.hadoopConfiguration.set(
+    s"fs.${ForklessLocalFileSystem.Scheme}.impl",
+    classOf[ForklessLocalFileSystem].getName)
 
+  // open to subclasses (a spec samples state at each commit), so the
+  // nested case class's equals cannot check its outer store
+  @scala.annotation.nowarn("msg=outer reference")
   final case class Snapshot(id: Long, parent: Long, wave: Int,
       tables: Map[String, String], metrics: Map[String, Long])
 
@@ -47,24 +64,14 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
   }
 
   def readManifest(id: Long): Snapshot = {
-    val txt = Files.readString(manifestPath(id))
-    // minimal deterministic JSON parse for our own flat format
-    def field(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*(-?\\d+|\"[^\"]*\"|\\{[^}]*\\})").r
-      m.findFirstMatchIn(txt).map(_.group(1)).getOrElse(
-        throw new IllegalStateException(s"manifest $id missing $k"))
-    }
-    def obj(k: String): Map[String, String] = {
-      val body = field(k).stripPrefix("{").stripSuffix("}")
-      if (body.trim.isEmpty) Map.empty
-      else body.split(",").map { kv =>
-        val Array(a, b) = kv.split(":", 2)
-        a.trim.stripPrefix("\"").stripSuffix("\"") ->
-          b.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap
-    }
-    Snapshot(field("id").toLong, field("parent").toLong,
-      field("wave").toInt, obj("tables"), obj("metrics").map { case (k, v) => k -> v.toLong })
+    val m = SnapshotStore.Json.readTree(Files.readString(manifestPath(id)))
+    def field(k: String) = Option(m.get(k)).getOrElse(
+      throw new IllegalStateException(s"manifest $id missing $k"))
+    def obj(k: String) =
+      field(k).properties.asScala.map(e => e.getKey -> e.getValue).toMap
+    Snapshot(field("id").asLong, field("parent").asLong, field("wave").asInt,
+      obj("tables").map { case (k, v) => k -> v.asText },
+      obj("metrics").map { case (k, v) => k -> v.asLong })
   }
 
   /** Write tables + commit a new snapshot; returns it. `metrics` carries the
@@ -79,24 +86,31 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     * Parquet footers ([[rowCount]]) and from accumulators the write jobs
     * populated, without any extra Spark job. `tables` is a Seq because
     * write ORDER is part of the crawl loop's caching contract (the first
-    * write materializes the shared cached frame).
+    * write materializes the shared cached frame). The committed metrics
+    * add one `<table>_write_ms` per table to `metricsFn`'s.
     */
   def commitWith(wave: Int, tables: Seq[(String, DataFrame)],
       metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
     val parent = head.map(_.id).getOrElse(-1L)
     val id = parent + 1
     val dataDir = rootPath.resolve(f"data-$id%06d")
+    val writeMs = Map.newBuilder[String, Long]
     val written = tables.map { case (name, df) =>
       val p = dataDir.resolve(name).toString
-      df.write.mode("overwrite").parquet(p)
+      val t0 = System.nanoTime()
+      df.write.mode("overwrite").parquet(s"${ForklessLocalFileSystem.Scheme}:$p")
+      writeMs += s"${name}_write_ms" -> (System.nanoTime() - t0) / 1000000L
       name -> p
     }.toMap
-    val metrics = metricsFn(written)
+    val metrics = metricsFn(written) ++ writeMs.result()
     val json = {
-      def q(s: String) = "\"" + s + "\""
-      val ts = written.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
-      val ms = metrics.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-      s"""{"id":$id,"parent":$parent,"wave":$wave,"tables":$ts,"metrics":$ms}"""
+      val m = SnapshotStore.Json.createObjectNode()
+        .put("id", id).put("parent", parent).put("wave", wave)
+      val ts = m.putObject("tables")
+      written.foreach { case (k, v) => ts.put(k, v) }
+      val ms = m.putObject("metrics")
+      metrics.foreach { case (k, v) => ms.put(k, v) }
+      SnapshotStore.Json.writeValueAsString(m)
     }
     val tmp = rootPath.resolve(s"manifest-$id.json.tmp")
     Files.writeString(tmp, json)
@@ -165,4 +179,10 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
       }
       b.result().reverse
   }
+}
+
+object SnapshotStore {
+  // manifests are JSON: strings escaped on write, parsed as JSON strings on
+  // read, so a path or name holding `,` `"` `}` round-trips
+  private val Json = new ObjectMapper()
 }

@@ -2,13 +2,14 @@ package graft.crawl
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.fixtures.SyntheticWeb
 import graft.frontier.{FrontierEntry, PoliteScheduler}
 import graft.store.SnapshotStore
 import graft.url.UrlCanon
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** North-rule acceptance: the distributed crawl must reproduce the
   * reference-faithful SEQUENTIAL simulator's crawl ordering, URL-seen set
@@ -359,5 +360,71 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
         threshold)
       assert(res.waves == 4 && fetchWave.map(_._2).max == 3, threshold)
     }
+  }
+
+  test("steady waves keep one plan shape: no wave after the second " +
+    "compiles a class, and the seen set is one Parquet scan") {
+    import spark.implicits._
+    // one host behind a budget of 2: page i links to its children 2i+1
+    // and 2i+2 and back to the start page, so every wave fetches 2 pages,
+    // finds 4 new links and re-discovers a seen URL — the same physical
+    // plan, stage for stage, from wave 1 on
+    def url(i: Int) = s"https://deep.example.org/p$i"
+    val web = (0 until 64).map { i =>
+      val anchors = Seq(2 * i + 1, 2 * i + 2, 0)
+        .map(c => s"""<li><a href="/p$c">p$c</a></li>""")
+      url(i) -> s"""<html><body><div class="b_con"><h1>page $i</h1>
+        |<ul>${anchors.mkString}</ul></div></body></html>""".stripMargin
+    }
+    val pages = web.map { case (u, h) => (u, h.getBytes("UTF-8")) }
+      .toDF("url", "html")
+    val seeds = Seq(SyntheticWeb.Seed(0, url(0), "blog", "")).toDS()
+    val robots = spark.emptyDataset[SyntheticWeb.Robots]
+
+    // the JVM's whole-stage and projection compile count at each commit
+    val compiles = mutable.ArrayBuffer[Long]()
+    val store = new SnapshotStore(java.nio.file.Files
+        .createTempDirectory("crawl-shape").toString, spark) {
+      override def commitWith(wave: Int, tables: Seq[(String, DataFrame)],
+          metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
+        val snap = super.commitWith(wave, tables, metricsFn)
+        compiles += org.apache.spark.metrics.source.CodegenMetrics
+          .METRIC_COMPILATION_TIME.getCount
+        snap
+      }
+    }
+    // at the default bloomMinSeen a crawl this small never probes the
+    // bloom, whose two branches over one shuffle AQE may number in either
+    // order (the same code under swapped codegen stage ids). The codegen
+    // cache keys a class by code and context classloader: a loader of its
+    // own keeps classes that earlier crawls in this JVM compiled for the
+    // same wave numbers from hiding a per-wave compile.
+    val thread = Thread.currentThread
+    val loader = thread.getContextClassLoader
+    thread.setContextClassLoader(
+      new java.net.URLClassLoader(Array.empty[java.net.URL], loader))
+    val res =
+      try CrawlLoop.run(spark, pages, seeds, robots, store, crawlCfg.copy(
+        maxWaves = 5, bloomMinSeen = CrawlLoop.Config().bloomMinSeen,
+        scheduler = crawlCfg.scheduler.copy(hostBudget = 2)))
+      finally thread.setContextClassLoader(loader)
+    assert(res.waves == 5 && compiles.size == 5)
+    assert(compiles.drop(2).forall(_ == compiles(1)),
+      s"compile count at each commit: $compiles")
+
+    val scans = res.seen.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1)
+    val seenFiles = store.snapshots.map(store.readManifest)
+      .flatMap(_.tables.collect { case (n, p) if n.startsWith("seen_w") => p })
+      .flatMap { dir =>
+        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+        try ls.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
+        finally ls.close()
+      }
+    assert(seenFiles.size >= 5)
+    assert(res.seen.inputFiles.map(f =>
+      java.nio.file.Paths.get(new java.net.URI(f))).toSet == seenFiles.toSet)
   }
 }

@@ -38,8 +38,8 @@ class SchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
         defaultDelayMs = 1000L)
       def norm(w: Array[Scheduled]) =
         w.map(s => (s.entry, s.slot, s.notBefore)).sortBy(_._1.urlHash).toSeq
-      val a = norm(PoliteScheduler.scheduleWithMap(frontier, robots, 7000L,
-        cfg).collect())
+      val a = norm(PoliteScheduler.scheduleWithMap(frontier,
+        spark.sparkContext.broadcast(robots), 7000L, cfg).collect())
       val b = norm(PoliteScheduler.scheduleSql(frontier, robots, 7000L, cfg)
         .collect())
       assert(a == b, s"agg vs sql mismatch at budget=$budget")

@@ -3,7 +3,9 @@ package graft.store
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 
 /** Commit-protocol guarantees: atomic manifest, HEAD only moves on full
   * commit, orphaned data from a crashed commit is invisible to readers.
@@ -62,5 +64,67 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store2 = new SnapshotStore(root, spark)
     assert(store2.snapshots == Seq(0L))
     assert(store2.head.get.id == 0)
+  }
+
+  test("a store root holding a comma commits manifests that read back, " +
+    "strings escaped") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("store,comma").toString
+    val store = new SnapshotStore(root, spark)
+    val s0 = store.commit(0, Map("t" -> Seq(1, 2).toDF("x"),
+      "u" -> Seq(3).toDF("x")), Map("a,b\"c}" -> 2L))
+    val reopened = new SnapshotStore(root, spark)
+    val back = reopened.head.get
+    assert(back.tables == s0.tables && back.tables("t").contains(","))
+    assert(back.metrics("a,b\"c}") == 2L)
+    assert(reopened.table(back, "t").get.count() == 2)
+    assert(reopened.rowCount(back.tables("u")) == 1)
+  }
+
+  test("forkless commits keep the modes and .crc checksums of a plain " +
+    "file: write of the same frame") {
+    import spark.implicits._
+    val df = Seq(1, 2, 3, 4).toDF("x").repartition(2)
+    val plain = Files.createTempDirectory("store-plain").resolve("t")
+    df.write.parquet(plain.toString)
+    val store = new SnapshotStore(
+      Files.createTempDirectory("store-modes").toString, spark)
+    val committed = Paths.get(store.commit(0, Map("t" -> df), Map.empty)
+      .tables("t"))
+
+    // relative name (the write's job uuid masked) -> rwx string, for every
+    // file and directory under a table dir, the dir itself included
+    def modes(dir: Path): Map[String, String] = {
+      val walk = Files.walk(dir)
+      try walk.iterator.asScala.map { f =>
+        dir.relativize(f).toString
+          .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+      }.toMap
+      finally walk.close()
+    }
+    val got = modes(committed)
+    assert(got == modes(plain))
+    assert(got.keys.count(_.endsWith(".parquet")) == 2)
+    assert(got.keys.count(_.endsWith(".parquet.crc")) == 2)
+
+    // the raw layer applies the mode it is given, not the process umask's
+    // default, and a sticky-bit mode still lands through Hadoop's own call
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create(s"${ForklessLocalFileSystem.Scheme}:///"),
+      spark.sparkContext.hadoopConfiguration)
+    def unixMode(p: Path) =
+      Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    def chmod(p: Path, mode: Short): Int = {
+      fs.setPermission(new org.apache.hadoop.fs.Path(
+        s"${ForklessLocalFileSystem.Scheme}:$p"),
+        new org.apache.hadoop.fs.permission.FsPermission(mode))
+      unixMode(p)
+    }
+    val file = committed.toFile.listFiles
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    assert(chmod(file, 0x1a0.toShort) == 0x1a0) // 0640
+    assert(chmod(committed, 0x1c0.toShort) == 0x1c0) // 0700
+    assert(chmod(committed, 0x3ff.toShort) == 0x3ff) // 01777
   }
 }

@@ -100,7 +100,7 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     })
     val sched = graft.frontier.PoliteScheduler.scheduleWithMap(
-      frontier, Map.empty, 0L,
+      frontier, Map.empty[String, (Seq[String], Long)], 0L,
       graft.frontier.PoliteScheduler.Config(hostBudget = 1000,
         defaultDelayMs = 15000L)) // 4 fetches/min/host across windows
     val base = ts(0).getTime
