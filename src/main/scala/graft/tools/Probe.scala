@@ -27,7 +27,8 @@ object Probe {
           pq.map(_.getLong(0)).toSet).size}/10")
       case "codebooks" =>
         // dump trained codebooks for cross-checking against the python
-        // Lloyd prototype (exact match expected)
+        // Lloyd prototype (exact match expected):
+        //   sbt "runMain graft.tools.Probe codebooks <sf dir>"
         val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
         val cents = graft.operators.Codebooks.ivf(spark, dir)
         cents.zipWithIndex.foreach { case (c, j) =>
@@ -37,6 +38,18 @@ object Probe {
         (0 until 4).foreach { s =>
           println(s"PQ $s ${cb.slice(s * 64, s * 64 + 8).mkString(",")}")
         }
+        // one digest over the raw bits of each full array, so two builds
+        // can be compared bit for bit
+        val ivfBits = java.nio.ByteBuffer.allocate(cents.map(_.length).sum * 4)
+        cents.foreach(_.foreach(x => ivfBits.putInt(
+          java.lang.Float.floatToRawIntBits(x))))
+        val pqBits = java.nio.ByteBuffer.allocate(cb.length * 8)
+        cb.foreach(x => pqBits.putLong(java.lang.Double.doubleToRawLongBits(x)))
+        def sha256(b: java.nio.ByteBuffer): String =
+          java.security.MessageDigest.getInstance("SHA-256")
+            .digest(b.array()).map(x => f"$x%02x").mkString
+        println(s"IVF sha256 ${sha256(ivfBits)}")
+        println(s"PQ sha256 ${sha256(pqBits)}")
         val brute = graft.operators.SimilarityQueries
           .annBruteForce(spark, dir).collect().map(_.getLong(0)).toSet
         val ivf = graft.operators.SimilarityQueries

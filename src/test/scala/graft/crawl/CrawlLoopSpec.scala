@@ -398,16 +398,24 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     // order (the same code under swapped codegen stage ids). The codegen
     // cache keys a class by code and context classloader: a loader of its
     // own keeps classes that earlier crawls in this JVM compiled for the
-    // same wave numbers from hiding a per-wave compile.
-    val thread = Thread.currentThread
-    val loader = thread.getContextClassLoader
-    thread.setContextClassLoader(
-      new java.net.URLClassLoader(Array.empty[java.net.URL], loader))
+    // same wave numbers from hiding a per-wave compile. Spark also
+    // compiles on pooled stage threads (ResultQueryStageExecution-*,
+    // shuffle-exchange-*), which keep the loader of the thread that made
+    // them, so every live thread gets the crawl's loader: otherwise one
+    // class compiles again whenever its stage lands on a thread with the
+    // other loader.
+    val fresh = new java.net.URLClassLoader(Array.empty[java.net.URL],
+      Thread.currentThread.getContextClassLoader)
+    val loaders = Thread.getAllStackTraces.keySet.asScala.toSeq.flatMap { t =>
+      val l = t.getContextClassLoader
+      // JDK-internal threads refuse a new loader; they compile no SQL
+      scala.util.Try(t.setContextClassLoader(fresh)).toOption.map(_ => t -> l)
+    }
     val res =
       try CrawlLoop.run(spark, pages, seeds, robots, store, crawlCfg.copy(
         maxWaves = 5, bloomMinSeen = CrawlLoop.Config().bloomMinSeen,
         scheduler = crawlCfg.scheduler.copy(hostBudget = 2)))
-      finally thread.setContextClassLoader(loader)
+      finally loaders.foreach { case (t, l) => t.setContextClassLoader(l) }
     assert(res.waves == 5 && compiles.size == 5)
     assert(compiles.drop(2).forall(_ == compiles(1)),
       s"compile count at each commit: $compiles")

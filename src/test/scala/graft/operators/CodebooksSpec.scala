@@ -2,13 +2,20 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+
+import graft.functions.{CosineE4, PqCodes, VecKernels}
 
 /** Invariants of the deterministic Lloyd codebook training (q51/q52/q55):
   * exact-rational init, partition-order independence of the quantized mean
-  * updates, empty-cell retention, and that training actually buys
-  * quantization quality on the real table (the recall story's substrate).
+  * updates, empty-cell retention, that training actually buys
+  * quantization quality on the real table (the recall story's substrate),
+  * that each pass's kernel runs below the lane explode, and bit identity
+  * with an independent driver-side Lloyd loop.
   */
 class CodebooksSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -132,5 +139,139 @@ class CodebooksSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.sum / vecs.length
     val (ei, et) = (mse(pqInitCodebook), mse(Codebooks.pq(spark, real)))
     assert(et < ei * 0.9, f"trained $et%.4f vs init $ei%.4f")
+  }
+
+  /** ~300 vectors: uniform lanes, plus bisectors of init-centroid pairs
+    * (exact IVF ties at the init codebook), salted with every shape the
+    * validity rule rejects — ragged, null-lane, NaN, ±Inf, all-zero and
+    * null vectors.
+    */
+  private lazy val dirtyVecs: Seq[Option[Seq[Option[Float]]]] = {
+    val rnd = new scala.util.Random(61)
+    def uniform(): Array[Float] =
+      Array.fill(64)((rnd.nextDouble() * 2 - 1).toFloat)
+    def unit(c: Array[Float]): Array[Double] = {
+      val n = math.sqrt(c.map(x => x.toDouble * x).sum)
+      c.map(_ / n)
+    }
+    val plain = Seq.fill(280)(uniform())
+    val bisectors = Seq((3, 1), (9, 2), (20, 7), (31, 30)).map { case (a, b) =>
+      val (ua, ub) = (unit(Codebooks.ivfInitCentroid(a)),
+        unit(Codebooks.ivfInitCentroid(b)))
+      Array.tabulate(64)(i => (ua(i) + ub(i)).toFloat)
+    }
+    def salted(x: Float): Array[Float] = { val v = uniform(); v(17) = x; v }
+    val bad = Seq(uniform().take(63), uniform() ++ uniform().take(1),
+      Array.empty[Float], salted(Float.NaN), salted(Float.NaN),
+      salted(Float.PositiveInfinity), salted(Float.NegativeInfinity),
+      Array.fill(64)(0.0f), Array.fill(64)(0.0f))
+    val lanes = (plain ++ bisectors ++ bad).map(v => Some(v.toSeq.map(Some(_))))
+    val nullLane = Seq.fill(3)(Some(uniform().toSeq.map(Some(_))
+      .updated(40, None)))
+    rnd.shuffle(lanes ++ nullLane ++ Seq.fill(3)(None))
+  }
+
+  private lazy val dirtyDf: DataFrame = {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("codebooks-dirty")
+      .resolve("embeddings.parquet").toString
+    dirtyVecs.map(Tuple1(_)).toDF("embedding").write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  private def isKernel(e: Expression): Boolean = e.exists {
+    case _: CosineE4 | _: PqCodes => true
+    case _ => false
+  }
+
+  private def assertKernelBelowGenerate(lanes: DataFrame): Unit = {
+    val plan = lanes.queryExecution.optimizedPlan
+    val gens = plan.collect { case g: Generate => g }
+    assert(gens.size == 1, s"expected one Generate in:\n$plan")
+    val gen = gens.head
+    def above(p: LogicalPlan): Seq[LogicalPlan] =
+      if (p eq gen) Nil
+      else if (p.exists(_ eq gen)) p +: p.children.flatMap(above)
+      else Nil
+    above(plan).foreach { op =>
+      assert(!op.expressions.exists(isKernel),
+        s"${op.nodeName} above the Generate evaluates the kernel per lane:\n$plan")
+    }
+    assert(gen.child.exists(_.expressions.exists(isKernel)),
+      s"the kernel is not computed below the Generate:\n$plan")
+  }
+
+  test("each Lloyd pass evaluates its kernel once per vector: the cell " +
+    "and the PQ codes are computed below the posexplode, never above it") {
+    val cents = Array.tabulate(Codebooks.IvfCells)(Codebooks.ivfInitCentroid)
+    assertKernelBelowGenerate(Codebooks.ivfLanes(dirtyDf, cents))
+    assertKernelBelowGenerate(
+      Codebooks.pqLanes(dirtyDf, VecKernels.pqInitCodebook))
+  }
+
+  test("trainIvf and trainPq equal an independent driver-side Lloyd loop " +
+    "bit for bit on a table salted with invalid vectors") {
+    val lane = Codebooks.LaneScale
+    def arr(v: Seq[Option[Float]]) =
+      new GenericArrayData(v.map(_.fold(null: Any)(x => x)).toArray)
+    def q(x: Float): Long = math.floor(x.toDouble * lane).toLong
+    val valid = dirtyVecs.flatten.filter(v => v.length == 64 &&
+      v.forall(_.exists(x => !x.isNaN && !x.isInfinite)) &&
+      v.exists(_.exists(_ != 0.0f))).map(_.map(_.get))
+    assert(valid.length == 284, "salted vectors must not pass the rule")
+
+    // IVF: argmax cosine_e4, smallest cell index on ties
+    var ties = 0
+    var cents = Array.tabulate(Codebooks.IvfCells)(Codebooks.ivfInitCentroid)
+    (0 until Codebooks.IvfIters).foreach { _ =>
+      val sums = Array.ofDim[Long](Codebooks.IvfCells, 64)
+      val ns = new Array[Long](Codebooks.IvfCells)
+      val cs = cents.map(c => arr(c.toSeq.map(Some(_))))
+      valid.foreach { v =>
+        val va = arr(v.map(Some(_)))
+        val scores = cs.map(VecKernels.cosineE4(va, _))
+        assert(scores.forall(_ != null))
+        val best = scores.map(_.longValue).max
+        val cell = scores.indexWhere(_.longValue == best)
+        if (scores.count(_.longValue == best) > 1) ties += 1
+        (0 until 64).foreach(i => sums(cell)(i) += q(v(i)))
+        ns(cell) += 1
+      }
+      cents = Array.tabulate(Codebooks.IvfCells) { j =>
+        if (ns(j) == 0) cents(j)
+        else Array.tabulate(64)(i =>
+          (sums(j)(i).toDouble / (ns(j) * lane)).toFloat)
+      }
+    }
+    assert(ties > 0, "no IVF tie: the smallest-index rule is unexercised")
+
+    // PQ: per subvector argmin-L2² code, every lane into (s, k, d)
+    import VecKernels.{PqK, PqSubDim}
+    var cb = VecKernels.pqInitCodebook
+    (0 until Codebooks.PqIters).foreach { _ =>
+      val sums = new Array[Long](cb.length)
+      val ns = new Array[Long](cb.length)
+      dirtyVecs.flatten.foreach { v =>
+        val codes = VecKernels.pqCodes(arr(v), cb)
+        if (codes != null) v.map(_.get).zipWithIndex.foreach { case (x, i) =>
+          val s = i / PqSubDim
+          val k = ((codes.longValue >> (4 * s)) & 15L).toInt
+          val idx = (s * PqK + k) * PqSubDim + i % PqSubDim
+          sums(idx) += q(x)
+          ns(idx) += 1
+        }
+      }
+      cb = Array.tabulate(cb.length)(idx =>
+        if (ns(idx) == 0) cb(idx)
+        else (sums(idx).toDouble / (ns(idx) * lane)).toFloat.toDouble)
+    }
+
+    val ivf = Codebooks.trainIvf(dirtyDf)
+    (ivf zip cents).zipWithIndex.foreach { case ((got, want), j) =>
+      assert(got.map(java.lang.Float.floatToRawIntBits).toSeq ==
+        want.map(java.lang.Float.floatToRawIntBits).toSeq, s"IVF cell $j")
+    }
+    assert(Codebooks.trainPq(dirtyDf).map(java.lang.Double.doubleToRawLongBits)
+      .toSeq == cb.map(java.lang.Double.doubleToRawLongBits).toSeq)
   }
 }
