@@ -1007,9 +1007,9 @@ object SparkEntry {
     // block (no drift possible), then computes connected components with
     // a recursive reachability CTE and min-labels each component — an
     // independent algorithm (transitive closure) arriving at the same
-    // clusters as Spark's min-label propagation. The ceiling covers the
-    // propagation only: Bench pays the shared q21 pair derivation up
-    // front as edge_derive_sec.
+    // clusters as Spark's large-star/small-star rounds. The ceiling
+    // covers those rounds only: Bench pays the shared q21 pair
+    // derivation up front as edge_derive_sec.
     Query("q60_dup_clusters", DedupQueries.dupClusters,
       s"""WITH RECURSIVE $jaccardCtes,
         |jp AS (

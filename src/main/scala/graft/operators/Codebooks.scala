@@ -178,16 +178,19 @@ object Codebooks {
   }
 
   /** The (s, k, d, sm, n) lane sums of one PQ pass under codebook `cb`,
-    * with the codes projected before the `posexplode`. The optimizer
-    * copies the kernel into the `codes` null filter it pushes below that
-    * projection, so a vector is encoded twice, not 64 times.
+    * with the codes projected before the `posexplode`. Invalid vectors
+    * are dropped by [[SimilarityQueries.validVec]] before the encode —
+    * exactly the vectors the kernel would give null codes — so their
+    * non-finite lanes never reach the quantizing cast, and no filter on
+    * `codes` exists for the optimizer to push below the projection with
+    * a second copy of the kernel: a vector is encoded once.
     */
   private[operators] def pqLanes(emb: DataFrame, cb: Array[Double]): DataFrame = {
     val sub = VecKernels.PqSubDim
     emb
+      .filter(SimilarityQueries.validVec(col("embedding")))
       .select(col("embedding"),
         SimilarityQueries.pqCodesCol(col("embedding"), cb).as("codes"))
-      .filter(col("codes").isNotNull)
       .select(col("codes"), posexplode(col("embedding")).as(Seq("i", "x")))
       .select(expr(s"CAST(i DIV $sub AS INT)").as("s"),
         expr(s"CAST(shiftright(codes, 4 * (i DIV $sub)) & 15 AS INT)")

@@ -563,43 +563,28 @@ object DedupQueries {
         (col("is_benchmark") === 0 && col("hits") > 0).cast("long"))
   }
 
-  /** Iteration cap for [[dupClusters]] — min-label propagation needs at
-    * most graph-diameter rounds, and near-dup components are band/bucket
-    * near-cliques (diameter ≤ ~3); the cap is a defensive bound, and
-    * convergence is asserted, not assumed.
-    */
-  val MaxCcIters = 15
-
   /** Duplicate-cluster assignment: connected components over the
     * [[ngramJaccard]] near-dup pair graph, every document labeled with
     * the minimum doc_id of its component (the canonical representative a
     * dedup pass keeps — "keep one per duplicate CLUSTER" rather than
-    * q04/q20's per-key keep-first). Deterministic: min-label propagation
-    * is order-independent and the edge set is the hash-green q21 output.
+    * q04/q20's per-key keep-first). Deterministic: the labels are the
+    * component minima whatever the order, and the edge set is the
+    * hash-green q21 output.
     *
-    * Scale shape: the classic iterative-Pregel discipline — each round is
-    * one equi-join (labels onto the symmetrized edge list) + one
-    * partial-aggregable min + one join back; the driver sees ONE count
-    * per round (the convergence check, the same bounded-metadata class as
-    * the crawl loop's wave counts — never data). Rounds ≤ component
-    * diameter; for the 10^10-doc regime where a boilerplate component's
-    * diameter could bite, the large-star/small-star variant (Kiveris et
-    * al. 2014) bounds rounds at O(log n) with the same per-round plan
-    * shape. Per-round lineage is truncated through `localCheckpoint`
+    * Scale shape: [[starLabels]] — alternating large-star/small-star
+    * rounds, each a few partial-aggregable mins and equi-joins over the
+    * current edge set, O(log n) rounds whatever a component's diameter
+    * (a chain of near-duplicates is as cheap as a clique). The driver
+    * sees one bounded answer per round (the stop test, the same
+    * bounded-metadata class as the crawl loop's wave counts — never
+    * data). Per-round lineage is truncated through `localCheckpoint`
     * (the crawl loop's discipline) so the plan does not grow with
-    * iterations.
+    * rounds.
     */
   def dupClusters(s: SparkSession, dir: String): DataFrame = {
     val edges = jaccardPairs(s, dir).select(col("doc_a"), col("doc_b"))
     val docs = t(s, dir, "documents").select(col("doc_id"))
-    // spark.graft.cc.algo = star selects the O(log n)-round
-    // large-star/small-star variant (Kiveris et al. 2014) — the
-    // 10^10-doc path where a boilerplate component's diameter would
-    // exceed min-label's round budget. Identical labels (StarCcSpec).
-    val labels =
-      if (s.conf.get("spark.graft.cc.algo", "minlabel") == "star")
-        starLabels(docs, edges)
-      else minLabelLabels(docs, edges)
+    val labels = starLabels(docs, edges)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .select(col("doc_id"), col("lbl").as("cluster"), col("cluster_size"),
@@ -607,49 +592,18 @@ object DedupQueries {
       .orderBy("doc_id")
   }
 
-  /** Min-label propagation to a fixpoint: per round one equi-join
-    * (labels onto the symmetrized edges), one partial-aggregable min,
-    * one join-back; rounds = component diameter. Throws past
-    * [[MaxCcIters]] — a diameter that large means a chain-shaped
-    * component, which is [[starLabels]]'s job (`spark.graft.cc.algo =
-    * star`), not a bigger round budget's.
-    */
-  private[operators] def minLabelLabels(docs: DataFrame,
-      edges: DataFrame): DataFrame = {
-    val sym = edges.union(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint() // edge derivation runs once, not once per round
-    var labels = docs.select(col("doc_id"), col("doc_id").as("lbl"))
-      .localCheckpoint()
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < MaxCcIters) {
-      val nbrMin = sym.join(labels, sym("doc_b") === labels("doc_id"))
-        .groupBy(sym("doc_a").as("doc_id")).agg(min("lbl").as("nlbl"))
-      val next = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
-      changed = next.join(labels.withColumnRenamed("lbl", "old"), "doc_id")
-        .filter(col("lbl") =!= col("old")).count()
-      labels = next
-      iter += 1
-    }
-    require(changed == 0,
-      s"label propagation did not converge in $iter rounds — a component " +
-        "with diameter this large wants spark.graft.cc.algo=star")
-    labels
-  }
-
   /** Round cap for [[starLabels]]: alternating large-star/small-star
-    * converges in O(log² n) rounds (O(log n) in practice); 30 is beyond
-    * any input that fits on hardware.
+    * converges in O(log² n) rounds (O(log n) in practice: 6 for a 41-node
+    * chain); 30 is beyond any input that fits on hardware. Convergence
+    * is asserted, not assumed.
     */
   val MaxStarIters = 30
 
   /** Large-star: per node u with m = min(Γ(u) ∪ {u}), rewire every
     * LARGER neighbor v > u to m. Edges are canonical (lo < hi) pairs;
-    * m ≤ u < v keeps the output canonical for free.
+    * m ≤ u < v keeps the output canonical for free. The output may hold
+    * duplicates; [[smallStar]]'s mins ignore them and its `distinct`
+    * drops them.
     */
   private def largeStar(e: DataFrame): DataFrame = {
     val sym = e.select(col("lo").as("src"), col("hi").as("dst"))
@@ -658,8 +612,6 @@ object DedupQueries {
     sym.join(mins, "src")
       .filter(col("dst") > col("src"))
       .select(least(col("mn"), col("src")).as("lo"), col("dst").as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
   }
 
   /** Small-star: group canonical edges by their LARGER endpoint u with
@@ -675,40 +627,48 @@ object DedupQueries {
     relink.union(self).distinct()
   }
 
+  /** Whether the distinct canonical edges `e` form a star forest: no
+    * `hi` has two `lo`s and no node is both a `lo` and a `hi`. Then each
+    * component is one star whose center, its `lo`, is the component
+    * minimum — a fixpoint of both star operations. One job: the nodes
+    * that break either rule, probed for emptiness.
+    */
+  private def isStarForest(e: DataFrame): Boolean =
+    e.select(col("hi").as("n"), lit(1).as("as_hi"), lit(0).as("as_lo"))
+      .union(
+        e.select(col("lo").as("n"), lit(0).as("as_hi"), lit(1).as("as_lo")))
+      .groupBy("n").agg(sum("as_hi").as("his"), max("as_lo").as("is_lo"))
+      .filter(col("his") > 1 || (col("his") > 0 && col("is_lo") > 0))
+      .isEmpty
+
   /** Connected-component labels via alternating large-star/small-star
     * (Kiveris et al. 2014, "Connected Components in MapReduce and
     * Beyond") — each round is two groupBy-min + join rounds over the
     * CURRENT edge set (which only shrinks toward stars), converging in
-    * O(log n) practical rounds REGARDLESS of component diameter: the
-    * q60 fallback for chain-shaped components that would exceed
-    * [[minLabelLabels]]'s diameter-bound round budget. At the fixpoint
-    * the edge set is a forest of stars (every node adjacent to its
-    * component min); labels read off the star edges, isolated nodes
-    * label themselves. Same per-round plan discipline as min-label:
-    * partial-aggregable mins, equi-joins, localCheckpoint lineage
-    * truncation, one bounded convergence count per round through the
-    * driver.
+    * O(log n) practical rounds REGARDLESS of component diameter. A round
+    * is step, checkpoint, stop once the edges are a star forest
+    * ([[isStarForest]]): every node is then adjacent to its component
+    * min, so labels read off the star edges, and isolated nodes label
+    * themselves. An empty edge set is a star forest, so an edgeless
+    * table stops after one round over nothing.
     */
   private[operators] def starLabels(docs: DataFrame,
       edges: DataFrame): DataFrame = {
+    // duplicates may stay: the first round's smallStar drops them
     var e = edges
       .select(least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .localCheckpoint()
     var iter = 0
-    var stable = e.isEmpty
+    var stable = false
     while (!stable && iter < MaxStarIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      // fixpoint check: two bounded scalar jobs per round (a production
-      // run folds this into one changed-count aggregate)
-      stable = next.count() == e.count() && next.except(e).isEmpty
-      e = next
+      e = smallStar(largeStar(e)).localCheckpoint()
+      stable = isStarForest(e)
       iter += 1
     }
     require(stable, s"star rounds did not converge in $iter rounds")
-    val fin = e.groupBy(col("hi").as("doc_id")).agg(min("lo").as("lbl"))
+    // a star forest gives each hi exactly one lo: its label
+    val fin = e.select(col("hi").as("doc_id"), col("lo").as("lbl"))
     docs.join(fin, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
   }

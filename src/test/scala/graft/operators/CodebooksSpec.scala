@@ -14,8 +14,9 @@ import graft.functions.{CosineE4, PqCodes, VecKernels}
   * exact-rational init, partition-order independence of the quantized mean
   * updates, empty-cell retention, that training actually buys
   * quantization quality on the real table (the recall story's substrate),
-  * that each pass's kernel runs below the lane explode, and bit identity
-  * with an independent driver-side Lloyd loop.
+  * that each pass's kernel runs below the lane explode (the PQ encode
+  * exactly once), and bit identity with an independent driver-side Lloyd
+  * loop.
   */
 class CodebooksSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -205,8 +206,14 @@ class CodebooksSpec extends AnyFunSuite with BeforeAndAfterAll {
     "and the PQ codes are computed below the posexplode, never above it") {
     val cents = Array.tabulate(Codebooks.IvfCells)(Codebooks.ivfInitCentroid)
     assertKernelBelowGenerate(Codebooks.ivfLanes(dirtyDf, cents))
-    assertKernelBelowGenerate(
-      Codebooks.pqLanes(dirtyDf, VecKernels.pqInitCodebook))
+    val pq = Codebooks.pqLanes(dirtyDf, VecKernels.pqInitCodebook)
+    assertKernelBelowGenerate(pq)
+    // exactly one encode: no filter on the codes holding a second copy
+    val plan = pq.queryExecution.optimizedPlan
+    val encodes = plan.flatMap(_.expressions.flatMap(_.collect {
+      case p: PqCodes => p
+    }))
+    assert(encodes.size == 1, s"expected one pq_codes in:\n$plan")
   }
 
   test("trainIvf and trainPq equal an independent driver-side Lloyd loop " +

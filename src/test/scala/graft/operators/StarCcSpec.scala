@@ -3,12 +3,14 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.util.Pretty
 
-/** The q60 connected-components algorithms side by side: min-label
-  * propagation (rounds = component diameter) vs alternating
-  * large-star/small-star (O(log n) rounds regardless of diameter — the
-  * 10^10-doc fallback, `spark.graft.cc.algo = star`). Ground truth is a
-  * driver-side union-find.
+/** q60's connected components: alternating large-star/small-star
+  * (O(log n) rounds whatever a component's diameter) with a star-forest
+  * stop test. Ground truth is a driver-side union-find, on a seeded
+  * random graph and on generated graphs of every component shape; a
+  * near-duplicate chain checks the labels through `dupClusters` itself.
   */
 class StarCcSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -43,24 +45,6 @@ class StarCcSpec extends AnyFunSuite with BeforeAndAfterAll {
       out: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("a 40-node chain (diameter ≫ MaxCcIters) CONVERGES under " +
-    "large-star/small-star in O(log n) rounds and labels every node with " +
-    "the chain min — while min-label propagation correctly refuses " +
-    "(its round budget IS the diameter bound the fallback exists for)") {
-    val nodes = (0L until 40L)
-    val chain = (0L until 39L).map(i => (i, i + 1))
-    val (n, e) = df(nodes, chain)
-
-    val star = labelsOf(DedupQueries.starLabels(n, e))
-    assert(star == nodes.map(_ -> 0L).toMap)
-
-    val thrown = intercept[IllegalArgumentException] {
-      DedupQueries.minLabelLabels(n, e).collect()
-    }
-    assert(thrown.getMessage.contains("star"),
-      "the failure must point at the fallback flag")
-  }
-
   test("star labels equal a driver-side union-find on a seeded random " +
     "graph (mixed cliques, chains, singletons)") {
     val rnd = new scala.util.Random(42)
@@ -71,23 +55,90 @@ class StarCcSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (n, e) = df(nodes, edges)
     val truth = unionFind(nodes, edges)
     assert(labelsOf(DedupQueries.starLabels(n, e)) == truth)
-    // (min-label is NOT run here: a sparse random graph grows path
-    // components past its 15-round diameter budget — the exact regime
-    // the star variant exists for; their agreement inside the budget is
-    // pinned by the q60 star-vs-default test below)
   }
 
-  test("q60 under spark.graft.cc.algo=star returns the identical result " +
-    "to the default min-label path on the real table") {
-    val real = "/root/testdata/sf0.001"
-    val default = DedupQueries.dupClusters(spark, real)
-      .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.cc.algo", "star")
-    try {
-      val star = DedupQueries.dupClusters(spark, real)
-        .collect().map(_.toSeq).toSeq
-      assert(star == default)
-    } finally spark.conf.unset("spark.graft.cc.algo")
+  /** One component of a generated graph: its shape and node count. */
+  private val genComponent: Gen[(String, Int)] = Gen.oneOf(
+    Gen.const("singleton" -> 1),
+    Gen.choose(2, 6).map("clique" -> _),
+    Gen.choose(2, 12).map("star" -> _),
+    Gen.choose(2, 64).map("chain" -> _))
+
+  private def edgesOf(shape: String,
+      ns: IndexedSeq[Long]): Seq[(Long, Long)] = shape match {
+    case "singleton" => Nil
+    case "clique" =>
+      for (i <- ns.indices; j <- i + 1 until ns.size) yield ns(i) -> ns(j)
+    case "star" => ns.tail.map(ns.head -> _)
+    case "chain" => ns.indices.tail.map(i => ns(i - 1) -> ns(i))
+  }
+
+  /** Graphs of ≤ 80 nodes on shuffled, gapped ids (so a component's
+    * minimum sits anywhere in it), with reversed, duplicated and
+    * self-loop edges mixed in; one case in five has no edges at all.
+    */
+  private val genGraph: Gen[(Seq[Long], Seq[(Long, Long)])] = {
+    val edgeless = Gen.choose(0, 6).map(n => ((0L until n).map(_ * 5), Nil))
+    val shaped = for {
+      k <- Gen.choose(1, 6)
+      comps <- Gen.listOfN(k, genComponent)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val kept = comps.scanLeft(0)(_ + _._2).tail.zip(comps)
+        .takeWhile(_._1 <= 80).map(_._2)
+      val offsets = kept.scanLeft(0)(_ + _._2)
+      val ids = rnd.shuffle((0 until offsets.last)
+        .map(i => i * 3L + rnd.nextInt(3))).toIndexedSeq
+      val edges = kept.zip(offsets).flatMap { case ((shape, n), at) =>
+        edgesOf(shape, ids.slice(at, at + n))
+      }.map { case (a, b) => if (rnd.nextBoolean()) (b, a) else (a, b) }
+      val dups = edges.filter(_ => rnd.nextInt(4) == 0)
+      val loops = ids.filter(_ => rnd.nextInt(8) == 0).map(n => n -> n)
+      (ids, rnd.shuffle(edges ++ dups ++ loops))
+    }
+    Gen.frequency(1 -> edgeless, 4 -> shaped)
+  }
+
+  test("property: star labels equal a driver-side union-find on generated " +
+    "graphs (empty edge sets, self-loops, duplicate and reversed edges, " +
+    "singletons, cliques, stars, chains up to 64 nodes)") {
+    val seen = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(genGraph) { case (nodes, edges) =>
+      if (edges.isEmpty) seen += "no edges"
+      if (edges.exists { case (a, b) => a == b }) seen += "self-loop"
+      if (edges.size > edges.distinct.size) seen += "duplicate"
+      val (n, e) = df(nodes, edges)
+      labelsOf(DedupQueries.starLabels(n, e)) == unionFind(nodes, edges)
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(20).withWorkers(1).withInitialSeed(8L), prop)
+    assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+    assert(seen == Set("no edges", "self-loop", "duplicate"),
+      "the generator must reach every edge-set quirk")
+  }
+
+  test("q60 labels a 41-document near-duplicate chain (diameter 40) with " +
+    "the chain minimum through dupClusters") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("dupchain").toString
+    // doc i holds words 10i … 10i+19: neighbours share 8 of 18 word
+    // 3-shingles (Jaccard 8/28 ≥ 15%), docs two apart share none
+    val n = 41
+    (0 until n).map { i =>
+      val text = (10 * i until 10 * i + 20).map(w => s"w$w").mkString(" ")
+      (i.toLong, text, "en", "src1", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$d/documents.parquet")
+    val pairs = DedupQueries.jaccardPairs(spark, d)
+      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.sorted.toSeq == (0L until n - 1L).map(i => (i, i + 1)),
+      "the fixture must be exactly a chain")
+    val out = DedupQueries.dupClusters(spark, d).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster"),
+        r.getAs[Long]("cluster_size"), r.getAs[Long]("is_representative")))
+    assert(out.toSeq == (0L until n).map(i =>
+      (i, 0L, n.toLong, if (i == 0) 1L else 0L)))
   }
 
   test("the q21/q60 shared pair set is materialized once per (session, " +
