@@ -31,6 +31,12 @@ object SparkEntry {
       build: (SparkSession, String) => DataFrame, oracle: String,
       ceilingSec: Double = 2.0)
 
+  /** Stands in the oracle SQL for the directory of side tables (crawl
+    * tables, hash-kernel outputs) that Verify dumps next to its output;
+    * Verify writes `oracle_sql.json` with the real path in its place.
+    */
+  val OracleTables = "{oracle_tables}"
+
   /** The registry as a name → build map, in registry order. */
   lazy val queries: ListMap[String, (SparkSession, String) => DataFrame] =
     ListMap(registry.map(q => q.name -> q.build): _*)
@@ -614,7 +620,7 @@ object SparkEntry {
         |  CAST(len(regexp_extract_all(d.text, '[a-z]+')) AS BIGINT)
         |    AS alpha_runs
         |FROM documents d
-        |JOIN '${CrawlPipelines.OracleDumpDir}/fingerprints/*.parquet' f
+        |JOIN '$OracleTables/fingerprints/*.parquet' f
         |  ON f.doc_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin),
     // q30: DuckDB recomputes every Gopher repetition stat from scratch via
@@ -661,7 +667,7 @@ object SparkEntry {
     Query("q22_minhash_lsh", DedupQueries.minhashLsh,
       s"""WITH bands AS (
         |  SELECT doc_id, band, band_hash
-        |  FROM '${CrawlPipelines.OracleDumpDir}/lsh_bands/*.parquet'),
+        |  FROM '$OracleTables/lsh_bands/*.parquet'),
         |bsz AS (
         |  SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
         |kept AS (
@@ -698,7 +704,7 @@ object SparkEntry {
     // irrelevant on both engines.
     Query("q23_simhash_pairs", DedupQueries.simhashPairs,
       s"""WITH sh AS (SELECT doc_id, simhash
-        |  FROM '${CrawlPipelines.OracleDumpDir}/simhash/*.parquet'),
+        |  FROM '$OracleTables/simhash/*.parquet'),
         |ch AS (SELECT doc_id, simhash, t.c AS chunk_idx,
         |    ((simhash >> (t.c*16)) & 65535) AS chunk
         |  FROM sh, generate_series(0, 3) t(c)),
@@ -1342,8 +1348,8 @@ object SparkEntry {
         |      AS arxiv_id,
         |    row_number() OVER (PARTITION BY r.doc_id ORDER BY r.variant_rank)
         |      AS rn
-        |  FROM '""" + CrawlPipelines.OracleDumpDir + """/api_requests/*.parquet' r
-        |  JOIN '""" + CrawlPipelines.OracleDumpDir + """/api_index/*.parquet' i
+        |  FROM '""" + OracleTables + """/api_requests/*.parquet' r
+        |  JOIN '""" + OracleTables + """/api_index/*.parquet' i
         |    ON r.variant = i.variant)
         |SELECT doc_id, variant_rank, arxiv_id FROM hits
         |WHERE rn = 1 ORDER BY doc_id""").stripMargin, ceilingSec = 3.0),
@@ -1363,7 +1369,7 @@ object SparkEntry {
       (s"""WITH l AS (
         |  SELECT year, regexp_extract_all(html,
         |    'href="/pdf(.+?)" class="pdf-link', 1) AS links
-        |  FROM '${CrawlPipelines.OracleDumpDir}/iclr_pages/*.parquet'),
+        |  FROM '$OracleTables/iclr_pages/*.parquet'),
         |u AS (SELECT year, unnest(links) AS link,
         |        CAST(generate_subscripts(links, 1) AS BIGINT) AS ord FROM l)
         |SELECT year, ord, 'https://openreview.net/pdf' || link AS download_url,
@@ -1426,42 +1432,42 @@ object SparkEntry {
         |WHERE rn <= 3 ORDER BY query, video_id""".stripMargin),
     // crawl-engine pipelines (§3.1-3.3) over the deterministic synthetic
     // web: the DuckDB side re-aggregates the records/fetch_log tables
-    // Verify dumps to CrawlPipelines.OracleDumpDir (the crawl itself is
+    // Verify dumps to the OracleTables directory (the crawl itself is
     // checked against the sequential simulator in CrawlLoopSpec; these
     // check every AGGREGATION over its outputs)
     Query("q40_crawl_flagship", CrawlPipelines.flagship,
       s"""SELECT url, label, title, abstract_text, crawl_rank
-        |FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |FROM '$OracleTables/records/*.parquet'
         |ORDER BY crawl_rank""".stripMargin),
     Query("q41_crawl_digest", CrawlPipelines.digest,
       s"""SELECT crawl_rank >> 50 AS seed, count(*) AS n_papers,
         |  CAST(sum(length(extracted_md)) AS BIGINT) AS digest_len
-        |FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |FROM '$OracleTables/records/*.parquet'
         |WHERE extracted_md <> '' GROUP BY 1 ORDER BY seed""".stripMargin),
     Query("q42_crawl_label_counts", CrawlPipelines.labelCounts,
       s"""SELECT label, count(*) AS n
-        |FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |FROM '$OracleTables/records/*.parquet'
         |WHERE label <> '' GROUP BY label ORDER BY label""".stripMargin),
     Query("q43_crawl_host_metrics", CrawlPipelines.hostMetrics,
       s"""SELECT host, wave, count(*) AS fetches,
         |  CAST(sum(CASE WHEN status=200 THEN 1 ELSE 0 END) AS BIGINT) AS ok,
         |  CAST(sum(CASE WHEN status=503 THEN 1 ELSE 0 END) AS BIGINT) AS retryable,
         |  CAST(sum(CASE WHEN status=404 THEN 1 ELSE 0 END) AS BIGINT) AS missing
-        |FROM '${CrawlPipelines.OracleDumpDir}/fetch_log/*.parquet'
+        |FROM '$OracleTables/fetch_log/*.parquet'
         |GROUP BY host, wave ORDER BY host, wave""".stripMargin),
     Query("q44_crawl_citations", CrawlPipelines.citations,
       s"""SELECT label AS id, title, url
-        |FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |FROM '$OracleTables/records/*.parquet'
         |WHERE parser = 'cite' ORDER BY id, url""".stripMargin),
     Query("q45_listing_digest", CrawlPipelines.listingDigest,
       s"""WITH listings AS (
         |  SELECT crawl_rank >> 50 AS seed, title AS date
-        |  FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |  FROM '$OracleTables/records/*.parquet'
         |  WHERE label = 'listing'),
         |papers AS (
         |  SELECT crawl_rank >> 50 AS seed, count(*) AS n_papers,
         |    CAST(sum(length(extracted_md)) AS BIGINT) AS digest_len
-        |  FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |  FROM '$OracleTables/records/*.parquet'
         |  WHERE url LIKE 'https://arxiv.org/%' GROUP BY 1)
         |SELECT l.seed, l.date, coalesce(p.n_papers, 0) AS n_papers,
         |  coalesce(p.digest_len, 0) AS digest_len
@@ -1470,11 +1476,11 @@ object SparkEntry {
     // conference + repo-search parser families (ICRA/ISCA/getrepository)
     Query("q46_conference_records", CrawlPipelines.conferenceRecords,
       s"""SELECT parser, url, doi, label, title, crawl_rank
-        |FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |FROM '$OracleTables/records/*.parquet'
         |WHERE parser IN ('icra', 'isca', 'icml', 'cvf') ORDER BY crawl_rank""".stripMargin),
     Query("q48_repo_search", CrawlPipelines.repoRecords,
       s"""SELECT label, title, url, crawl_rank
-        |FROM '${CrawlPipelines.OracleDumpDir}/records/*.parquet'
+        |FROM '$OracleTables/records/*.parquet'
         |WHERE parser = 'repo' ORDER BY crawl_rank""".stripMargin)
   )
 }

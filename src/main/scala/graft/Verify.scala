@@ -22,12 +22,15 @@ object Verify {
         System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
     }
-    // crawl + API tables for the q4x/q28 oracles: the DuckDB side reads
-    // these by absolute path and re-aggregates them independently
+    // crawl, API and hash-kernel tables for the oracles: the DuckDB side
+    // reads these by absolute path and re-aggregates them independently.
+    // A sibling of outDir, not a subdirectory: every subdirectory of
+    // outDir is read as a query dump.
+    val oracleTables = new java.io.File(outDir).getAbsolutePath + "_oracle_tables"
     try {
-      graft.operators.CrawlPipelines.dumpForOracle(spark)
-      graft.operators.CoreQueries.dumpApiTables(spark, sfDir)
-      graft.operators.DedupQueries.dumpForOracle(spark, sfDir)
+      graft.operators.CrawlPipelines.dumpForOracle(spark, oracleTables)
+      graft.operators.CoreQueries.dumpApiTables(spark, sfDir, oracleTables)
+      graft.operators.DedupQueries.dumpForOracle(spark, sfDir, oracleTables)
     } catch { case e: Throwable =>
       System.err.println(s"[verify] oracle dump failed: ${e.getMessage}")
     }
@@ -44,7 +47,9 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.registry
-      .map(e => s"${q(e.name)}: ${q(e.oracle)}").mkString("{", ",", "}")
+      .map(e => s"${q(e.name)}: " +
+        q(e.oracle.replace(SparkEntry.OracleTables, oracleTables)))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -94,10 +94,12 @@ import graft.url.UrlCanon
   */
 object CrawlLoop extends Serializable {
 
+  /** A URL answering 503 is fetched at most this many times (R2). */
+  final val MaxAttempts = 3
+
   final case class Config(
       scheduler: PoliteScheduler.Config = PoliteScheduler.Config(),
       seenCfg: UrlSeen.Config = UrlSeen.Config(),
-      maxAttempts: Int = 3, // R2: drop after 3 tries
       maxWaves: Int = 64,
       // below this seen-set size the bloom probe costs more than the
       // anti-join it accelerates — skip it (the exact join is always the
@@ -127,10 +129,9 @@ object CrawlLoop extends Serializable {
     * row-side twin of the columnar `xxhash64(host, canon_url)`.
     */
   def hash64(canonUrl: String): Long = {
-    val host = UrlCanon.hostOf(canonUrl)
+    val host = UrlCanon.hostOf(canonUrl).getBytes("UTF-8")
     val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      host.getBytes("UTF-8"), org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-      host.getBytes("UTF-8").length, 42L)
+      host, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, host.length, 42L)
     val b = canonUrl.getBytes("UTF-8")
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, h)
@@ -242,7 +243,6 @@ object CrawlLoop extends Serializable {
       // wave would compile a new class.
       val okAcc = spark.sparkContext.longAccumulator(s"fetched_ok_w$wave")
       val retryAcc = spark.sparkContext.longAccumulator(s"retries_w$wave")
-      val maxAttempts = cfg.maxAttempts
       val fetchLogDelta = fetched
         .select(col("sched").as("_1"), col("status").as("_2"))
         .as[(Scheduled, Int)]
@@ -250,7 +250,7 @@ object CrawlLoop extends Serializable {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           it.map { case (s, status) =>
             if (status == 200) okAcc.add(1L)
-            else if (status == 503 && s.entry.attempts + 1 < maxAttempts)
+            else if (status == 503 && s.entry.attempts + 1 < MaxAttempts)
               retryAcc.add(1L)
             FetchLogRow(s.entry.urlHash, s.entry.host, thisWave,
               s.entry.attempts, status, s.slot, s.notBefore, pid)
@@ -293,7 +293,7 @@ object CrawlLoop extends Serializable {
       val retries = fetched.filter(col("status") === 503)
         .select(col("sched.entry").as("e")).select("e.*")
         .as[FrontierEntry]
-        .filter((e: FrontierEntry) => e.attempts + 1 < cfg.maxAttempts)
+        .filter((e: FrontierEntry) => e.attempts + 1 < MaxAttempts)
         .map(e => e.copy(attempts = e.attempts + 1))
 
       // frontier' = (frontier ∖ scheduled) ∪ retries ∪ new links; the

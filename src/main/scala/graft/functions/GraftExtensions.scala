@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** SparkSessionExtensions hook registering the engine's native functions
   * with the SQL surface:
@@ -15,141 +16,54 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * plug-point, so a cluster operator enables them with one conf line.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("url_canon"),
-      new ExpressionInfo(classOf[CanonicalizeUrl].getName, "url_canon"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("url_canon", CanonicalizeUrl.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("url_hash64"),
-      new ExpressionInfo(classOf[UrlHash64].getName, "url_hash64"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("url_hash64", UrlHash64.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("url_path"),
-      new ExpressionInfo(classOf[UrlPath].getName, "url_path"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("url_path", UrlPath.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => GraftExtensions.shinglesBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinhashBands].getName, "minhash_bands"),
-      (children: Seq[Expression]) => GraftExtensions.minhashBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("word_grams"),
-      new ExpressionInfo(classOf[WordGrams].getName, "word_grams"),
-      (children: Seq[Expression]) => GraftExtensions.gramsBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("gopher_stats"),
-      new ExpressionInfo(classOf[GopherStats].getName, "gopher_stats"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("gopher_stats", GopherStats.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("simhash64", SimHash64.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_e4"),
-      new ExpressionInfo(classOf[CosineE4].getName, "cosine_e4"),
-      (children: Seq[Expression]) => GraftExtensions.cosineBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("rhp_sig64"),
-      new ExpressionInfo(classOf[RhpSig64].getName, "rhp_sig64"),
-      (children: Seq[Expression]) => GraftExtensions.rhpSigBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("pq_codes"),
-      new ExpressionInfo(classOf[PqCodes].getName, "pq_codes"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("pq_codes", e => PqCodes(e))(children)))
-    ext.injectFunction((
-      FunctionIdentifier("pq_cos_e4"),
-      new ExpressionInfo(classOf[PqCosE4].getName, "pq_cos_e4"),
-      (children: Seq[Expression]) => GraftExtensions.pqCosBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("clean_title"),
-      new ExpressionInfo(classOf[CleanTitle].getName, "clean_title"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("clean_title", CleanTitle.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("search_variants"),
-      new ExpressionInfo(classOf[SearchVariants].getName, "search_variants"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("search_variants", SearchVariants.apply)(children)))
-    ext.injectFunction((
-      FunctionIdentifier("atom_first_id"),
-      new ExpressionInfo(classOf[AtomFirstId].getName, "atom_first_id"),
-      (children: Seq[Expression]) =>
-        GraftExtensions.unaryBuilder("atom_first_id", AtomFirstId.apply)(children)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build _))
+    }
 }
 
 object GraftExtensions {
-  /** Extract an integer LITERAL argument; a column, a non-number, or a
-    * FRACTIONAL number (2.9 would otherwise silently truncate to 2) gets
-    * an analysis-time error naming the function, not an eval NPE.
+  /** One SQL function: `build` checks the argument count against
+    * `lo to hi` and hands the arguments to `mk`. Both the arity and the
+    * integer-literal errors name the function, at analysis time, instead
+    * of surfacing as an IndexOutOfBoundsException or an eval NPE (and
+    * extra arguments are never silently ignored).
     */
-  private def intLit(fn: String, e: Expression): Int = e match {
-    case lit: org.apache.spark.sql.catalyst.expressions.Literal
-        if lit.value != null && lit.value.isInstanceOf[Number] &&
-          lit.value.asInstanceOf[Number].doubleValue() ==
-            lit.value.asInstanceOf[Number].intValue().toDouble =>
-      lit.value.asInstanceOf[Number].intValue()
-    case _ => throw new IllegalArgumentException(
-      s"$fn expects integer literal parameters, got: ${e.sql}")
+  final case class SqlFunction(name: String, cls: Class[_ <: Expression],
+      lo: Int, hi: Int, mk: Args => Expression) {
+    def build(children: Seq[Expression]): Expression = {
+      if (children.length < lo || children.length > hi)
+        throw new IllegalArgumentException(
+          s"$name expects ${if (hi == lo) s"$lo" else s"$lo to $hi"} " +
+            s"argument(s), got ${children.length}")
+      mk(new Args(name, children))
+    }
   }
 
-  /** Arity check at analysis time — a wrong argument count should name
-    * the function, not surface as an IndexOutOfBoundsException from the
-    * builder (and extra arguments must not be silently ignored).
-    */
-  private def arity(fn: String, children: Seq[Expression], lo: Int,
-      hi: Int): Unit =
-    if (children.length < lo || children.length > hi)
-      throw new IllegalArgumentException(
-        s"$fn expects ${if (hi == lo) s"$lo" else s"$lo to $hi"} " +
-          s"argument(s), got ${children.length}")
+  final class Args(fn: String, children: Seq[Expression]) {
+    def apply(i: Int): Expression = children(i)
 
-  /** word_shingles(text[, n=3]) */
-  def shinglesBuilder(children: Seq[Expression]): Expression = {
-    arity("word_shingles", children, 1, 2)
-    WordShingles(children.head,
-      if (children.length > 1) intLit("word_shingles", children(1)) else 3)
+    /** Argument `i` as an integer LITERAL, `default` when absent; a
+      * column, a non-number, or a FRACTIONAL number (2.9 would otherwise
+      * silently truncate to 2) is rejected.
+      */
+    def int(i: Int, default: Int): Int =
+      if (children.length <= i) default
+      else children(i) match {
+        case Literal(v: Number, _) if v.doubleValue() == v.intValue().toDouble =>
+          v.intValue()
+        case e => throw new IllegalArgumentException(
+          s"$fn expects integer literal parameters, got: ${e.sql}")
+      }
   }
 
-  /** minhash_bands(shingles[, k=32, bands=8]) */
-  def minhashBuilder(children: Seq[Expression]): Expression = {
-    arity("minhash_bands", children, 1, 3)
-    MinhashBands(children.head,
-      if (children.length > 1) intLit("minhash_bands", children(1)) else 32,
-      if (children.length > 2) intLit("minhash_bands", children(2)) else 8)
-  }
+  private def unary(name: String, cls: Class[_ <: Expression],
+      mk: Expression => Expression): SqlFunction =
+    SqlFunction(name, cls, 1, 1, a => mk(a(0)))
 
-  /** word_grams(text[, n=3]) — ordered non-distinct n-grams */
-  def gramsBuilder(children: Seq[Expression]): Expression = {
-    arity("word_grams", children, 1, 2)
-    WordGrams(children.head,
-      if (children.length > 1) intLit("word_grams", children(1)) else 3)
-  }
-
-  /** rhp_sig64(vec[, nBits=8]) */
-  def rhpSigBuilder(children: Seq[Expression]): Expression = {
-    arity("rhp_sig64", children, 1, 2)
-    RhpSig64(children.head,
-      if (children.length > 1) intLit("rhp_sig64", children(1)) else 8)
-  }
-
-  /** cosine_e4(a, b) */
-  def cosineBuilder(children: Seq[Expression]): Expression = {
-    arity("cosine_e4", children, 2, 2)
-    CosineE4(children(0), children(1))
-  }
-
-  /** pq_cos_e4(codes, q).
+  /** Every SQL function the engine registers; [[GraftExtensions.apply]]
+    * and [[install]] both register exactly this list.
     *
     * CODEBOOK CONTRACT: the SQL-registered `pq_codes`/`pq_cos_e4` pair
     * binds the deterministic INIT codebook
@@ -166,48 +80,37 @@ object GraftExtensions {
     * score share one value by construction. VecExpressionsSpec pins the
     * SQL pair's self-consistency and the cross-surface mismatch.
     */
-  def pqCosBuilder(children: Seq[Expression]): Expression = {
-    arity("pq_cos_e4", children, 2, 2)
-    PqCosE4(children(0), children(1))
-  }
-
-  /** exactly-one-argument builder for the unary expressions */
-  def unaryBuilder(fn: String, mk: Expression => Expression)(
-      children: Seq[Expression]): Expression = {
-    arity(fn, children, 1, 1)
-    mk(children.head)
-  }
+  val functions: Seq[SqlFunction] = Seq(
+    unary("url_canon", classOf[CanonicalizeUrl], CanonicalizeUrl(_)),
+    unary("url_hash64", classOf[UrlHash64], UrlHash64(_)),
+    unary("url_path", classOf[UrlPath], UrlPath(_)),
+    // word_shingles(text[, n=3])
+    SqlFunction("word_shingles", classOf[WordShingles], 1, 2,
+      a => WordShingles(a(0), a.int(1, 3))),
+    // minhash_bands(shingles[, k=32, bands=8])
+    SqlFunction("minhash_bands", classOf[MinhashBands], 1, 3,
+      a => MinhashBands(a(0), a.int(1, 32), a.int(2, 8))),
+    // word_grams(text[, n=3]): ordered non-distinct n-grams
+    SqlFunction("word_grams", classOf[WordGrams], 1, 2,
+      a => WordGrams(a(0), a.int(1, 3))),
+    unary("gopher_stats", classOf[GopherStats], GopherStats(_)),
+    unary("simhash64", classOf[SimHash64], SimHash64(_)),
+    SqlFunction("cosine_e4", classOf[CosineE4], 2, 2,
+      a => CosineE4(a(0), a(1))),
+    // rhp_sig64(vec[, nBits=8])
+    SqlFunction("rhp_sig64", classOf[RhpSig64], 1, 2,
+      a => RhpSig64(a(0), a.int(1, 8))),
+    unary("pq_codes", classOf[PqCodes], PqCodes(_)),
+    SqlFunction("pq_cos_e4", classOf[PqCosE4], 2, 2,
+      a => PqCosE4(a(0), a(1))),
+    unary("clean_title", classOf[CleanTitle], CleanTitle(_)),
+    unary("search_variants", classOf[SearchVariants], SearchVariants(_)),
+    unary("atom_first_id", classOf[AtomFirstId], AtomFirstId(_)))
 
   /** Install the same functions on an already-built session (temp
     * functions) — for hosts that construct the SparkSession themselves.
     */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    ColumnBridge.registerTempFunction(spark, "url_canon",
-      unaryBuilder("url_canon", CanonicalizeUrl.apply))
-    ColumnBridge.registerTempFunction(spark, "url_hash64",
-      unaryBuilder("url_hash64", UrlHash64.apply))
-    ColumnBridge.registerTempFunction(spark, "url_path",
-      unaryBuilder("url_path", UrlPath.apply))
-    ColumnBridge.registerTempFunction(spark, "word_shingles",
-      shinglesBuilder)
-    ColumnBridge.registerTempFunction(spark, "minhash_bands",
-      minhashBuilder)
-    ColumnBridge.registerTempFunction(spark, "word_grams", gramsBuilder)
-    ColumnBridge.registerTempFunction(spark, "gopher_stats",
-      unaryBuilder("gopher_stats", GopherStats.apply))
-    ColumnBridge.registerTempFunction(spark, "simhash64",
-      unaryBuilder("simhash64", SimHash64.apply))
-    ColumnBridge.registerTempFunction(spark, "cosine_e4", cosineBuilder)
-    ColumnBridge.registerTempFunction(spark, "rhp_sig64", rhpSigBuilder)
-    ColumnBridge.registerTempFunction(spark, "pq_codes",
-      unaryBuilder("pq_codes", e => PqCodes(e)))
-    ColumnBridge.registerTempFunction(spark, "pq_cos_e4", pqCosBuilder)
-    ColumnBridge.registerTempFunction(spark, "clean_title",
-      unaryBuilder("clean_title", CleanTitle.apply))
-    ColumnBridge.registerTempFunction(spark, "search_variants",
-      unaryBuilder("search_variants", SearchVariants.apply))
-    ColumnBridge.registerTempFunction(spark, "atom_first_id",
-      unaryBuilder("atom_first_id", AtomFirstId.apply))
-  }
+  def install(spark: SparkSession): Unit =
+    functions.foreach(f =>
+      ColumnBridge.registerTempFunction(spark, f.name, f.build))
 }

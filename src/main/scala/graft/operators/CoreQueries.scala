@@ -296,16 +296,15 @@ object CoreQueries {
             "</id></entry></feed>")).as("atom_xml"))
   }
 
-  /** Dump the API request/response tables for the q28 DuckDB oracle —
-    * the DuckDB side re-runs the join + first-variant pick + XML id
-    * extraction independently over these files.
+  /** Dump the API request/response tables under `out` for the q28 DuckDB
+    * oracle — the DuckDB side re-runs the join + first-variant pick + XML
+    * id extraction independently over these files.
     */
-  val ApiDumpDir: String = CrawlPipelines.OracleDumpDir
-  def dumpApiTables(s: SparkSession, dir: String): Unit = {
+  def dumpApiTables(s: SparkSession, dir: String, out: String): Unit = {
     apiRequests(s, dir).coalesce(1).write.mode("overwrite")
-      .parquet(s"$ApiDumpDir/api_requests")
+      .parquet(s"$out/api_requests")
     apiIndex(s, dir).coalesce(1).write.mode("overwrite")
-      .parquet(s"$ApiDumpDir/api_index")
+      .parquet(s"$out/api_index")
   }
 
   /** S4 (name2arxivid.py:147-175) + E10/E11: title → clean → search

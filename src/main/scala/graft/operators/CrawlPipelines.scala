@@ -114,20 +114,17 @@ object CrawlPipelines {
       .select("label", "title", "url", "crawl_rank")
       .orderBy("crawl_rank")
 
-  /** Dump the crawl's records + fetch_log as plain parquet at a FIXED
-    * path, so the driver's DuckDB oracle can aggregate the same tables
-    * the q4x queries aggregate (Verify calls this after the query dump;
-    * the q4x oracle SQL reads these files by absolute path).
+  /** Dump the crawl's records + fetch_log as plain parquet under `out`,
+    * so the driver's DuckDB oracle can aggregate the same tables the q4x
+    * queries aggregate (Verify calls this after the query dump; the q4x
+    * oracle SQL reads these files under [[graft.SparkEntry.OracleTables]]).
     */
-  val OracleDumpDir = "/tmp/graft_oracle_tables"
-  def dumpForOracle(s: SparkSession): Unit = {
+  def dumpForOracle(s: SparkSession, out: String): Unit = {
     val r = result(s)
-    r.records.coalesce(1).write.mode("overwrite")
-      .parquet(s"$OracleDumpDir/records")
-    r.fetchLog.coalesce(1).write.mode("overwrite")
-      .parquet(s"$OracleDumpDir/fetch_log")
+    r.records.coalesce(1).write.mode("overwrite").parquet(s"$out/records")
+    r.fetchLog.coalesce(1).write.mode("overwrite").parquet(s"$out/fetch_log")
     iclrPages(s).coalesce(1).write.mode("overwrite")
-      .parquet(s"$OracleDumpDir/iclr_pages")
+      .parquet(s"$out/iclr_pages")
   }
 
   // ---- q50: ICLR end-to-end (S6 local-file source → E3 regex extract) ----

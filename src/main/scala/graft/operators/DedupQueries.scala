@@ -674,17 +674,17 @@ object DedupQueries {
   }
 
   /** Dump the Spark-computed hash-kernel outputs (minhash band hashes,
-    * simhashes, xxhash64 content hashes) as parquet so the q19/q22/q23
-    * DuckDB oracles can independently recompute everything DOWNSTREAM of
-    * the hash kernels — banding self-join with the [[BucketCap]], pair
-    * dedup, chunk pigeonhole, hamming distance, and the exact-Jaccard
-    * verify over shingles DuckDB re-derives from raw `documents.text`
-    * itself. The kernels' own per-value semantics are UDF-twin spec-pinned
-    * (TextExpressionsSpec); xxhash64/minhash have no DuckDB twin, which is
-    * why the dump boundary sits exactly at the hash values.
+    * simhashes, xxhash64 content hashes) as parquet under `out` so the
+    * q19/q22/q23 DuckDB oracles can independently recompute everything
+    * DOWNSTREAM of the hash kernels — banding self-join with the
+    * [[BucketCap]], pair dedup, chunk pigeonhole, hamming distance, and
+    * the exact-Jaccard verify over shingles DuckDB re-derives from raw
+    * `documents.text` itself. The kernels' own per-value semantics are
+    * UDF-twin spec-pinned (TextExpressionsSpec); xxhash64/minhash have no
+    * DuckDB twin, which is why the dump boundary sits exactly at the hash
+    * values.
     */
-  def dumpForOracle(s: SparkSession, dir: String): Unit = {
-    val out = CrawlPipelines.OracleDumpDir
+  def dumpForOracle(s: SparkSession, dir: String, out: String): Unit = {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), shingles(col("text")).as("sh"))
       .filter(size(col("sh")) > 0)

@@ -16,7 +16,7 @@ import org.apache.spark.util.AccumulatorV2
   * canonicalized+hashed URLs").
   *
   * Layout: `url_seen(bucket int, sketch binary)` — the 64-bit host-salted
-  * xxHash (graft.url.UrlCols.urlHash) is range-split by `pmod(hash, nBuckets)`;
+  * xxHash (graft.url.UrlCols.urlHash64) is range-split by `pmod(hash, nBuckets)`;
   * each bucket owns an independent Bloom segment built by a typed
   * [[Aggregator]] (distributed build with map-side partial merge — no
   * driver-side sketch object, unlike `df.stat.bloomFilter`).
@@ -28,10 +28,12 @@ import org.apache.spark.util.AccumulatorV2
   * change the seen-set, so bloom only *discards* definite-unseens cheaply
   * before the anti-join shuffle).
   *
-  * At 10^10-URL scale: nBuckets ≈ 4096 × 1 MiB segments ≈ 4 GiB total
-  * sketch for ~10^10 keys at ~3 bits/key; buckets build in parallel and
-  * broadcast per-wave. The exact table is the Iceberg-style `url_seen`
-  * snapshot, anti-joined with AQE handling skew.
+  * Size: the default [[Config]] holds 64 × 65,536 bits (4.2 Mbit) with
+  * k = 5. By the standard formula (1 − e^(−kn/m))^k its false-positive
+  * rate is 0.0001 at 131,072 URLs, 0.16 at 1 M and 0.96 at 4 M, and
+  * nothing resizes it yet as the seen set grows. Buckets build in
+  * parallel and broadcast per-wave. The exact table is the Iceberg-style
+  * `url_seen` snapshot, anti-joined with AQE handling skew.
   */
 object UrlSeen {
 

@@ -1,45 +1,16 @@
 package graft.url
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
-/** Column-level URL helpers.
-  *
-  * `urlHash` is the engine's canonical URL identity (north_rule:
-  * "canonicalized + hashed URLs ... host-salted 64-bit xxHash"):
-  * `xxhash64(host, canonical_url)` — both built-in, whole-stage-codegen
-  * friendly; the canonicalizer itself is a deterministic Scala UDF (pure,
-  * so Catalyst may freely reorder/collapse it).
-  */
+/** Column-level URL helpers. */
 object UrlCols {
-  val canonicalizeUdf = udf((u: String) => UrlCanon.canonicalize(u))
-  val hostUdf = udf((u: String) => UrlCanon.hostOf(u))
-  val resolveUdf = udf((b: String, r: String) => UrlCanon.resolve(b, r))
-
-  def canon(url: Column): Column = canonicalizeUdf(url)
-  def host(url: Column): Column = hostUdf(url)
-
-  /** Native-expression variants (graft.functions): stay inside
-    * whole-stage codegen, unlike the udf bridge above.
+  /** The engine's canonical URL identity (north_rule: "canonicalized +
+    * hashed URLs ... host-salted 64-bit xxHash"): the native
+    * [[graft.functions.UrlHash64]] expression, which canonicalizes and
+    * hashes inside whole-stage codegen.
     */
-  import org.apache.spark.sql.graftshim.ColumnBridge
-  def canonExpr(url: Column): Column =
-    ColumnBridge.column(graft.functions.CanonicalizeUrl(
-      ColumnBridge.expression(url)))
   def urlHash64(url: Column): Column =
     ColumnBridge.column(graft.functions.UrlHash64(
       ColumnBridge.expression(url)))
-
-  /** Host-salted 64-bit hash of the canonical URL. */
-  def urlHash(canonUrl: Column): Column =
-    xxhash64(hostUdf(canonUrl), canonUrl)
-
-  /** Attach (canon_url, host, url_hash) to a frame with a `url` column. */
-  def withUrlIdentity(df: org.apache.spark.sql.DataFrame,
-      urlCol: String = "url"): org.apache.spark.sql.DataFrame = {
-    val c = canon(col(urlCol))
-    df.withColumn("canon_url", c)
-      .withColumn("host", host(col("canon_url")))
-      .withColumn("url_hash", xxhash64(col("host"), col("canon_url")))
-  }
 }

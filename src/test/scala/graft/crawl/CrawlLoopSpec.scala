@@ -108,7 +108,7 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     .map(r => r.host -> ((r.disallow_prefixes, r.crawl_delay_ms))).toMap
 
   lazy val sim = simulate(pagesMap, seedsDs.collect().toSeq, robotsMap,
-    crawlCfg.scheduler.hostBudget, crawlCfg.maxAttempts, crawlCfg.maxWaves)
+    crawlCfg.scheduler.hostBudget, CrawlLoop.MaxAttempts, crawlCfg.maxWaves)
 
   def runEngine(dir: java.nio.file.Path): CrawlLoop.Result = {
     val store = new SnapshotStore(dir.toString, spark)
@@ -338,7 +338,7 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     val robots = spark.emptyDataset[SyntheticWeb.Robots]
     val simRes = simulate(web.map { case (u, h) => CrawlLoop.hash64(u) -> h },
       seeds.collect().toSeq, Map.empty, crawlCfg.scheduler.hostBudget,
-      crawlCfg.maxAttempts, crawlCfg.maxWaves)
+      CrawlLoop.MaxAttempts, crawlCfg.maxWaves)
 
     // the default threshold feeds the segments raw hashes, 0 task-built
     // segment partials

@@ -5,6 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.extract.Compat
+import graft.functions.GraftExtensions
 
 /** Salted aggregation equivalence + reference-bug compat fixtures. */
 class SkewCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -44,13 +45,50 @@ class SkewCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("GraftExtensions.install registers SQL functions on a plain session") {
-    graft.functions.GraftExtensions.install(spark)
-    val r = spark.sql(
-      "SELECT url_hash64('https://A.example.org/x/../y') AS h, " +
-        "url_canon('HTTP://E.org:80/a%2fb') AS c").collect()(0)
-    assert(r.getLong(0) == graft.crawl.CrawlLoop.hash64(
+    // one sample call per entry of the function table: each must resolve,
+    // and give the same value, on an installed plain session and on a
+    // session built with the extensions
+    val vec = "transform(sequence(1, 64), i -> CAST(i % 7 - 3 AS FLOAT))"
+    val text = "'The quick brown fox jumps over the lazy dog again'"
+    val samples = Map(
+      "url_canon" -> "'HTTP://E.org:80/a%2fb'",
+      "url_hash64" -> "'https://A.example.org/x/../y'",
+      "url_path" -> "'https://a.org/p/q?x=1'",
+      "word_shingles" -> s"$text, 2",
+      "minhash_bands" -> s"word_shingles($text), 16, 4",
+      "word_grams" -> s"$text, 2",
+      "gopher_stats" -> text,
+      "simhash64" -> text,
+      "cosine_e4" -> s"$vec, reverse($vec)",
+      "rhp_sig64" -> s"$vec, 12",
+      "pq_codes" -> vec,
+      "pq_cos_e4" -> s"pq_codes($vec), $vec",
+      "clean_title" -> "'CVPR 2019 Foo'",
+      "search_variants" -> "'a b c d e'",
+      "atom_first_id" -> ("'<feed><entry><id>http://arxiv.org/abs/2401.00001v2" +
+        "</id></entry></feed>'"))
+    val names = GraftExtensions.functions.map(_.name)
+    names.foreach(n => assert(samples.contains(n), s"$n: no sample call"))
+    val query = names.map(n => s"$n(${samples(n)}) AS $n")
+      .mkString("SELECT ", ", ", "")
+
+    GraftExtensions.install(spark)
+    val installed = spark.sql(query).collect()(0)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val extended = try SparkSession.builder()
+      .withExtensions(new GraftExtensions).getOrCreate()
+      .sql(query).collect()(0)
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    names.foreach(n =>
+      assert(installed.getAs[Any](n) == extended.getAs[Any](n), n))
+
+    assert(installed.getAs[Long]("url_hash64") == graft.crawl.CrawlLoop.hash64(
       graft.url.UrlCanon.canonicalize("https://A.example.org/x/../y")))
-    assert(r.getString(1) ==
+    assert(installed.getAs[String]("url_canon") ==
       graft.url.UrlCanon.canonicalize("HTTP://E.org:80/a%2fb"))
   }
 
