@@ -70,6 +70,12 @@ object Bench {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** A synthetic-web page's parser family, from its URL's host. */
+  private def kindOf(url: String): String =
+    if (url.contains("//search")) "search"
+    else if (url.contains("//papers")) "paper"
+    else "blog"
+
   /** Shuffle-free parse/extract throughput: pages → entry derivation →
     * parse → count agg, a map-only job. This is the CPU-scaling probe:
     * no shuffle IO, so throughput should track cores almost linearly —
@@ -82,11 +88,7 @@ object Bench {
       .select(col("url"), col("html"))
       .as[(String, Array[Byte])]
       .map { case (u, htmlBytes) =>
-        val kind =
-          if (u.contains("//search")) "search"
-          else if (u.contains("//papers")) "paper"
-          else "blog"
-        val e = CrawlLoop.entryOf(u, kind, 0, 0, 0, 0)
+        val e = CrawlLoop.entryOf(u, kindOf(u), 0, 0, 0, 0)
         val r = PageParsers.parse(e, new String(htmlBytes, "UTF-8"))
         r.records.size.toLong + r.links.size.toLong
       }
@@ -102,14 +104,10 @@ object Bench {
   def wavePipeline(s: SparkSession, pagesTable: String): (Long, Long) = {
     import s.implicits._
     val pages = s.table(pagesTable)
-    val frontier = pages.select(col("url")).as[String].map { u =>
-      val kind =
-        if (u.contains("//search")) "search"
-        else if (u.contains("//papers")) "paper"
-        else "blog"
-      CrawlLoop.entryOf(u, kind, 0, 0, 0, 0)
-    }
-    val sched = PoliteScheduler.scheduleSql(frontier, Map.empty, 0L,
+    val frontier = pages.select(col("url")).as[String]
+      .map(u => CrawlLoop.entryOf(u, kindOf(u), 0, 0, 0, 0))
+    val sched = PoliteScheduler.scheduleWithMap(frontier,
+      Map.empty[String, (Seq[String], Long)], 0L,
       PoliteScheduler.Config(hostBudget = Int.MaxValue, defaultDelayMs = 0L))
     val parsed = sched.toDF()
       .withColumn("url_hash", col("entry.urlHash"))
@@ -143,15 +141,14 @@ object Bench {
 
   /** Skew evidence leg (north_rule: host-key skew handled explicitly): a
     * frontier where one hot host holds 6.4 M URLs — 1600× a cold host —
-    * pushed through the schedule formulations at a finite politeness
-    * budget on identical cached input. The bounded paths (typed-
-    * Aggregator map-side top-k; the window twin via Spark's own
-    * WindowGroupLimit pushdown) keep pre-shuffle volume budget-bound
-    * regardless of hot-host size; the "sql_nobound" contrast disables the
-    * pushdown, so every hot-host row shuffles into ONE post-shuffle
-    * partition — its max task time IS the skew, and it grows linearly
-    * with the hot host. Reported per impl: wall seconds (min of 2,
-    * interleaved), p50/max task millis, and PER-RUN shuffle rows.
+    * scheduled at a finite politeness budget on cached input. The typed-
+    * Aggregator top-k reduces each input partition to one buffer row per
+    * host before the shuffle, so `wave_skew_agg_shuffle_rows` is bound by
+    * hosts × partitions while `wave_skew_input_rows` (every frontier row,
+    * which an unbounded per-host top-k would move into one post-shuffle
+    * task) grows with the hot host. Reported: wall seconds (min of 2),
+    * p50/max task millis and shuffle rows of that same rep, and the input
+    * rows.
     */
   def skewLeg(s: SparkSession,
       results: scala.collection.mutable.LinkedHashMap[String, Double]): Unit = {
@@ -166,64 +163,38 @@ object Bench {
       CrawlLoop.entryOf(s"https://$h.example.org/p/$idx", "blog", 0, 0,
         (idx >> 14).toInt, (idx & 0x3fff).toInt)
     }.cache()
-    frontier.count() // materialize the input outside every timed region
+    // materialize the input outside every timed region
+    val inputRows = frontier.count()
     val cfg = PoliteScheduler.Config(hostBudget = 512, defaultDelayMs = 0L)
     val robots = Map.empty[String, (Seq[String], Long)]
-    val impls = Seq("agg", "sql", "sql_nobound")
-    def run(impl: String): Long = {
-      // "sql_nobound" = the window twin with Spark's rank-limit pushdown
-      // (WindowGroupLimit) disabled — the UNBOUNDED contrast leg: every
-      // hot-host row shuffles into one post-shuffle partition, which is
-      // what any naive per-host top-k does at 10^10-frontier scale
-      val key = "spark.sql.optimizer.windowGroupLimitThreshold"
-      val saved = s.conf.get(key)
-      if (impl == "sql_nobound") s.conf.set(key, "-1")
-      try {
-        val sched =
-          if (impl == "agg")
-            PoliteScheduler.scheduleWithMap(frontier, robots, 0L, cfg)
-          else PoliteScheduler.scheduleSql(frontier, robots, 0L, cfg)
-        sched.toDF().count()
-      } finally s.conf.set(key, saved)
-    }
-    val secs = impls.map(_ -> scala.collection.mutable.ArrayBuffer[Double]())
-      .toMap
     // one listener PER REP: the reported task stats must come from the
     // same rep as the armored (min) wall time — pooling reps would let a
     // cold rep-1 straggler, the exact noise min-of-2 exists to reject,
     // masquerade as the skew evidence
-    val stats = impls
-      .map(_ -> scala.collection.mutable.ArrayBuffer[TaskDurations]())
-      .toMap
-    val reps = 2
-    for (rep <- 1 to reps; impl <- impls) {
+    val runs = (1 to 2).map { _ =>
       val listener = new TaskDurations
-      stats(impl) += listener
       s.sparkContext.addSparkListener(listener)
       try {
-        secs(impl) += time(run(impl))._2
+        val sec = time(PoliteScheduler.scheduleWithMap(frontier, robots, 0L,
+          cfg).toDF().count())._2
         // the bus is async: drain before detaching, or the straggler's
         // TaskEnd (the event this leg measures) is nondeterministically
         // lost
         org.apache.spark.graftshim.ListenerBridge.drain(s.sparkContext)
+        (sec, listener)
       } finally s.sparkContext.removeSparkListener(listener)
     }
-    impls.foreach { impl =>
-      val best = secs(impl).indexOf(secs(impl).min)
-      val td = stats(impl)(best)
-      val d = td.durs.sorted
-      results(s"wave_skew_${impl}_sec") = secs(impl).min
-      results(s"wave_skew_${impl}_task_p50_ms") =
-        if (d.isEmpty) -1.0 else d(d.length / 2).toDouble
-      results(s"wave_skew_${impl}_task_max_ms") =
-        if (d.isEmpty) -1.0 else d.last.toDouble
-      // the scale property: rows crossing the wire in the reported run.
-      // Bounded paths move ≤ budget rows per host per partition; the
-      // nobound contrast moves the ENTIRE hot host into one post-shuffle
-      // partition — at a 10^8-row hot host that one task is the
-      // OOM/straggler
-      results(s"wave_skew_${impl}_shuffle_rows") = td.shuffleRows.toDouble
-    }
+    val (sec, td) = runs.minBy(_._1)
+    val d = td.durs.sorted
+    results("wave_skew_agg_sec") = sec
+    results("wave_skew_agg_task_p50_ms") =
+      if (d.isEmpty) -1.0 else d(d.length / 2).toDouble
+    results("wave_skew_agg_task_max_ms") =
+      if (d.isEmpty) -1.0 else d.last.toDouble
+    // the scale property: rows crossing the wire in the reported run
+    // (the partial buffers plus the count's), beside the frontier rows
+    results("wave_skew_agg_shuffle_rows") = td.shuffleRows.toDouble
+    results("wave_skew_input_rows") = inputRows.toDouble
     frontier.unpersist()
   }
 
@@ -425,7 +396,14 @@ object Bench {
     // the 4N (=4-core) leg of the headline 1→4 pair; the 4→32 pair and
     // the 32-core throughput are in `queries` (whole-box ceiling)
     val amort = results("crawl_amortization_ratio")
-    println(s"""{"metric":"urls_fetched_parsed_per_sec","value":${f"${waveTput(4)}%.1f"},"unit":"urls/sec","total_sec":${f"$total%.1f"},"queries":$qs,"sf":"$sfDir","pages":$nPages,"scaling_efficiency":${f"$waveEff14%.3f"},"scaling_efficiency_1_to_4":${f"$waveEff14%.3f"},"scaling_efficiency_4_to_32":${f"$waveEff432%.3f"},"crawl_amortization_ratio":${f"$amort%.2f"}}""")
+    val crawlTput = results("crawl_end_to_end_urls_per_sec")
+    val head = s""""metric":"urls_fetched_parsed_per_sec","value":${f"${waveTput(4)}%.1f"},"unit":"urls/sec","total_sec":${f"$total%.1f"}"""
+    val eff = s""""scaling_efficiency_1_to_4":${f"$waveEff14%.3f"},"scaling_efficiency_4_to_32":${f"$waveEff432%.3f"}"""
+    val crawl = s""""crawl_end_to_end_urls_per_sec":${f"$crawlTput%.1f"},"crawl_amortization_ratio":${f"$amort%.2f"}"""
+    println(s"""{$head,"queries":$qs,"sf":"$sfDir","pages":$nPages,"scaling_efficiency":${f"$waveEff14%.3f"},$eff,"crawl_amortization_ratio":${f"$amort%.2f"}}""")
+    // the full line outgrows a 2,000-char tail; this last line (< 500
+    // bytes) keeps the headline readable from the end of the output
+    println(s"{$head,$eff,$crawl}")
     spark.stop()
   }
 }

@@ -1,9 +1,8 @@
 package graft.frontier
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
 
 /** The frontier priority queue + per-host politeness scheduler.
   *
@@ -44,6 +43,16 @@ object FrontierEntry {
   */
 final case class Scheduled(entry: FrontierEntry, slot: Int, notBefore: Long)
 
+/** The per-host politeness scheduler: one `groupByKey(host)` typed
+  * Aggregator ([[PoliteScheduler.TopKByRank]]), the crawl loop's only
+  * scheduler. A window form (`row_number` over host ≤ budget) gives the
+  * same wave, but it is bounded before the shuffle only while Spark pushes
+  * its rank limit down (`WindowGroupLimit`), which Spark skips once the
+  * budget passes its window group limit threshold (1,000 by default):
+  * from there a hot host goes whole into one task. The
+  * Aggregator's map-side top-k holds at every finite budget, so it is the
+  * form kept.
+  */
 object PoliteScheduler {
 
   final case class Config(
@@ -83,7 +92,7 @@ object PoliteScheduler {
 
   /** Robots admission for one entry: false when its path starts with a
     * disallow prefix of its host. The one row-side check behind the
-    * crawl loop's admission filter and both schedulers.
+    * crawl loop's admission filter and the scheduler.
     */
   def allowed(robots: Map[String, (Seq[String], Long)],
       e: FrontierEntry): Boolean =
@@ -134,42 +143,4 @@ object PoliteScheduler {
     scheduleWithMap(frontier,
       frontier.sparkSession.sparkContext.broadcast(robotsMap), waveStartMs,
       cfg)
-
-  /** Window-function twin of [[scheduleWithMap]]: row_number over
-    * (partitionBy host, orderBy crawl order) ≤ budget, slot/notBefore from
-    * the row number. Produces the IDENTICAL wave (SchedulerSpec proves it)
-    * but stays entirely in Tungsten rows — no per-host object buffers
-    * through the shuffle — which is what an unbounded budget needs, where
-    * the typed Aggregator would buffer each host whole. The crawl loop
-    * uses [[scheduleWithMap]] (map-side partial top-k when budget ≪
-    * rows/host).
-    */
-  def scheduleSql(frontier: Dataset[FrontierEntry],
-      robotsMap: Map[String, (Seq[String], Long)],
-      waveStartMs: Long, cfg: Config = Config()): Dataset[Scheduled] = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-
-    val bc = spark.sparkContext.broadcast(robotsMap)
-    val defaultDelay = cfg.defaultDelayMs
-
-    val w = Window.partitionBy(col("host"))
-      .orderBy(col("seed"), col("depth"), col("pageIdx"), col("posInPage"),
-        col("urlHash"))
-    val delayUdf = udf((host: String) =>
-      bc.value.get(host).map(_._2).getOrElse(defaultDelay))
-    frontier.filter(e => allowed(bc.value, e)).toDF()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= cfg.hostBudget)
-      .withColumn("slot", (col("rn") - 1).cast("int"))
-      .withColumn("notBefore",
-        lit(waveStartMs) + col("slot").cast("long") * delayUdf(col("host")))
-      .select(
-        struct(col("url"), col("urlHash"), col("host"), col("kind"),
-          col("seed"), col("depth"), col("pageIdx"), col("posInPage"),
-          col("attempts")).as("entry"),
-        col("slot"), col("notBefore"))
-      .as[Scheduled]
-  }
 }
