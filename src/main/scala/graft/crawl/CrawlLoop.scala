@@ -26,16 +26,27 @@ import graft.url.UrlCanon
   *     lineage truncation that keeps plan depth constant across hundreds
   *     of waves (no ever-growing DAG, no driver OOM);
   *   - FOUR actions per wave — the four snapshot writes (fetch_log,
-  *     records, frontier, seen delta). Spark splits each into several jobs
-  *     (AQE query stages, broadcasts): perfbench's traced crawl_deep runs
-  *     read 12 jobs per wave (`crawl.jobs_per_wave`) on 4 cores. No action
-  *     is a metric: all count metrics (scheduled / records / new_links,
-  *     the loop's own frontier-count termination check, and a resume's
-  *     starting seen and frontier counts) come from the written Parquet
-  *     FOOTERS (driver-side metadata, no job — [[SnapshotStore.rowCount]]);
-  *     fetched_ok / retries ride the fetch_log write as accumulators; the
-  *     manifest adds driver times: `plan_ms` (loop top to the first
-  *     write) and the store's `<table>_write_ms` per write;
+  *     records, frontier, seen delta), each issued to the wave's pending
+  *     snapshot ([[graft.store.SnapshotStore.Pending]]) as soon as its
+  *     frame is defined, so they run concurrently while the loop is still
+  *     planning the next one; the manifest commits once all four land.
+  *     A write is issued only after every `.cache()` its plan reads
+  *     (`fetched`, `parsed`, `newEntries`) is registered, so concurrent
+  *     readers of a cached frame build it once instead of each
+  *     recomputing it. Spark splits each write into several jobs (AQE
+  *     query stages, cache stages, broadcasts): perfbench's traced
+  *     crawl_deep runs read 14 jobs per wave (`crawl.jobs_per_wave`) on 4
+  *     cores: two writes that reach a cached frame together each start
+  *     its cache-stage job, and the later job's tasks read the blocks the
+  *     earlier one built. No action is a metric: all count metrics
+  *     (scheduled / records / new_links, the loop's own frontier-count
+  *     termination check, and a resume's starting seen and frontier
+  *     counts) come from the written Parquet FOOTERS (driver-side
+  *     metadata, no job — [[SnapshotStore.rowCount]]); fetched_ok /
+  *     retries ride the fetch_log write as accumulators; the manifest adds
+  *     driver times: `plan_ms` (loop top to the LAST write issued; the
+  *     first write starts once the fetch join is planned) and the store's
+  *     `<table>_write_ms` per write, which overlap;
   *   - reloads start no job: the frontier, the seen deltas and the
   *     returned records / fetch_log are read back with the schema they
   *     were written with, so Spark plans each read on the driver instead
@@ -192,28 +203,48 @@ object CrawlLoop extends Serializable {
       else seenUnion(spark, store)
 
     // driver-side Bloom segment map, seeded ONCE per crawl from the
-    // starting seen set: small starts collect the hashes (one job); large
-    // resumes build the segments DISTRIBUTED (UrlSeen.buildSegments) and
-    // collect only the nBuckets-row segment table — the driver never sees
-    // a hash
+    // starting seen set: a set below bloomDeltaThreshold is collected as
+    // hashes; a larger one builds the segments DISTRIBUTED
+    // (UrlSeen.buildSegments) and collects only the nBuckets-row segment
+    // table — the driver never sees a hash. A resume sizes the set from
+    // the seen deltas' footers. A fresh crawl asks for at most
+    // bloomDeltaThreshold seed hashes in ONE bounded action: fewer back
+    // are the whole set, and a full batch is counted instead.
     val segMap = scala.collection.mutable.Map[Int, Array[Long]]()
     def addToSeg(h: Long): Unit = UrlSeen.addToSegMap(segMap, h, cfg.seenCfg)
-    var seenCount =
-      if (head.isEmpty) seen.count()
-      else deltaPaths(store, "seen_w").map(store.rowCount).sum
-    if (seenCount < cfg.bloomDeltaThreshold)
-      seen.select(col("url_hash")).as[Long].collect().foreach(addToSeg)
-    else if (seenCount > 0)
-      UrlSeen.orMergeInto(segMap, UrlSeen.collectSegments(
-        UrlSeen.buildSegments(seen, cfg.seenCfg)))
+    val seenHashes = seen.select(col("url_hash")).as[Long]
+    val (startSeen, smallSeen) = head match {
+      case Some(_) =>
+        val n = deltaPaths(store, "seen_w").map(store.rowCount).sum
+        (n, Option.when(n < cfg.bloomDeltaThreshold)(seenHashes.collect()))
+      case None =>
+        val hs = seenHashes
+          .limit(math.min(cfg.bloomDeltaThreshold, Int.MaxValue).toInt)
+          .collect()
+        if (hs.length < cfg.bloomDeltaThreshold) (hs.length.toLong, Some(hs))
+        else (seen.count(), None)
+    }
+    var seenCount = startSeen
+    smallSeen match {
+      case Some(hs) => hs.foreach(addToSeg)
+      case None if seenCount > 0 =>
+        UrlSeen.orMergeInto(segMap, UrlSeen.collectSegments(
+          UrlSeen.buildSegments(seen, cfg.seenCfg)))
+      case None => ()
+    }
+    // a fresh frontier is empty exactly when its distinct hashes are, and
+    // its count only gates the loop
     var frontierCount =
-      head.fold(frontier.count())(store.tableRowCount(_, "frontier"))
+      head.fold(seenCount)(store.tableRowCount(_, "frontier"))
 
     var wave = startWave
     while (frontierCount > 0 && wave < cfg.maxWaves) {
       val waveT0 = System.nanoTime()
       val thisWave = wave
       val waveStart = wave.toLong * 1000000L
+      // each table's write starts as soon as its frame is defined, once
+      // every cached frame its plan reads is registered (see Pending)
+      val snapshot = store.begin(wave)
       val sched = PoliteScheduler.scheduleWithMap(frontier, bcRobots,
         waveStart, cfg.scheduler)
 
@@ -235,10 +266,10 @@ object CrawlLoop extends Serializable {
         .toDF("sched", "status", "html")
         .cache()
 
-      // fetched_ok / retries ride the fetch_log write (job 1, the action
-      // that also materializes the `fetched` cache) as accumulators —
-      // no count() jobs. Diagnostic-only: a task retry could inflate them.
-      // The wave number rides the closure, not a `lit(wave)` column: a
+      // fetched_ok / retries ride the fetch_log write (the first write
+      // issued, so the first to read the `fetched` cache) as accumulators
+      // — no count() jobs. Diagnostic-only: a task retry could inflate
+      // them. The wave number rides the closure, not a `lit(wave)` column: a
       // literal is compiled into the serializer's generated code, so every
       // wave would compile a new class.
       val okAcc = spark.sparkContext.longAccumulator(s"fetched_ok_w$wave")
@@ -256,6 +287,7 @@ object CrawlLoop extends Serializable {
               s.entry.attempts, status, s.slot, s.notBefore, pid)
           }
         }.toDF()
+      snapshot.write(s"fetch_log_w$wave", fetchLogDelta)
 
       val parsed = fetched.filter(col("status") === 200)
         .select(col("sched.entry").as("_1"), col("html").as("_2"))
@@ -264,6 +296,7 @@ object CrawlLoop extends Serializable {
         .cache()
 
       val recordsDelta = parsed.flatMap(_.records).toDF()
+      snapshot.write(s"records_w$wave", recordsDelta)
 
       // out-links: canonicalize, in-batch dedup keeping min crawl order,
       // robots admission filter, then seen-filter (bloom + exact anti)
@@ -286,7 +319,7 @@ object CrawlLoop extends Serializable {
         .select("url", "urlHash", "host", "kind", "seed", "depth", "pageIdx",
           "posInPage", "attempts")
         .as[FrontierEntry]
-        .cache() // job 3 (frontier write) populates; job 4 (seen Δ) reuses
+        .cache() // read by both the frontier and the seen-delta write
 
       // retries: transient failures re-enter with attempts+1 (R2);
       // exhausted rows drop (their fetch_log row keeps the final attempt)
@@ -305,6 +338,7 @@ object CrawlLoop extends Serializable {
         .join(schedHashes, frontier("urlHash") === schedHashes("sched_hash"),
           "left_anti").as[FrontierEntry]
       val nextFrontier = remaining.union(retries).union(newEntries)
+      snapshot.write("frontier", nextFrontier.toDF())
 
       // seen delta: this wave's new hashes (+ the seed hashes once, at
       // wave 0). The hashes also ride this write into an accumulator
@@ -337,16 +371,12 @@ object CrawlLoop extends Serializable {
             .toDF("url_hash")
           (df, () => UrlSeen.orMergeInto(segMap, segAcc.value))
         }
+      snapshot.write(s"seen_w$wave", seenDelta)
 
       val seedCount = if (wave == 0) seenCount else 0L
       var metrics = Map.empty[String, Long]
       val planMs = (System.nanoTime() - waveT0) / 1000000L
-      val snap = store.commitWith(wave, Seq(
-        s"fetch_log_w$wave" -> fetchLogDelta, // job 1: caches fetched + accs
-        s"records_w$wave" -> recordsDelta, // job 2: caches parsed
-        "frontier" -> nextFrontier.toDF(), // job 3: caches newEntries
-        s"seen_w$wave" -> seenDelta // job 4: bloom hash accumulator
-      ), written => {
+      val snap = snapshot.commit { written =>
         // footer-only metadata counts — zero extra Spark jobs
         metrics = Map(
           "scheduled" -> store.rowCount(written(s"fetch_log_w$wave")),
@@ -358,11 +388,11 @@ object CrawlLoop extends Serializable {
           "records" -> store.rowCount(written(s"records_w$wave")),
           "new_links" -> (store.rowCount(written(s"seen_w$wave")) - seedCount),
           "retries_approx" -> retryAcc.value.toLong,
-          // driver time from the loop top to the first write
+          // driver time from the loop top to the last write issued
           "plan_ms" -> planMs
         )
         metrics
-      })
+      }
 
       absorbBloom()
 

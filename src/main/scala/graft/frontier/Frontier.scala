@@ -62,20 +62,21 @@ object PoliteScheduler {
 
   /** Typed Aggregator keeping the `budget` lowest-crawl-rank entries per
     * key — a distributed bounded top-k with map-side partial aggregation:
-    * each partition reduces to ≤ budget rows *before* the shuffle, so a
-    * hot host with 10^7 frontier rows moves only `budget` rows per
-    * partition instead of all of them (the host-skew answer the north rule
-    * asks for, complementing AQE skew splitting).
+    * each partition reduces a key to one buffer of ≤ 2 × budget entries
+    * *before* the shuffle, so a hot host with 10^7 frontier rows moves one
+    * record per partition, bounded by the budget, instead of all of them
+    * (the host-skew answer the north rule asks for, complementing AQE skew
+    * splitting). An unbounded budget never compacts.
     */
   final class TopKByRank(budget: Int)
       extends Aggregator[FrontierEntry, Seq[FrontierEntry], Seq[FrontierEntry]] {
     private def keyOf(e: FrontierEntry) =
       (e.seed, e.depth, e.pageIdx, e.posInPage, e.urlHash)
-    // amortized bound: buffers grow unsorted and compact (sort + truncate)
-    // only past 2× budget, so per-row cost is O(1) amortized instead of a
-    // sort per insert; `finish` does the single final sort.
-    private def compactAt: Int = math.max(
-      if (budget >= Int.MaxValue / 2) Int.MaxValue else 2 * budget, 1024)
+    // amortized bound: buffers grow unsorted and compact (sort + truncate
+    // to budget) only past 2× budget, so a sort is paid once per budget
+    // inserts instead of per insert; `finish` does the single final sort.
+    private def compactAt: Int =
+      if (budget >= Int.MaxValue / 2) Int.MaxValue else 2 * budget
     private def compact(b: Seq[FrontierEntry]): Seq[FrontierEntry] =
       if (b.length > compactAt) b.sortBy(keyOf).take(budget) else b
     def zero: Seq[FrontierEntry] = Vector.empty

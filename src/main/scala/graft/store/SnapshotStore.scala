@@ -13,24 +13,31 @@ import scala.jdk.CollectionConverters._
   * unchanged.
   *
   * Commit protocol (single-writer, crash-safe):
-  *   1. write each table to `data/<snapshotId>/<table>/` (immutable, never
-  *      rewritten);
+  *   1. write each table to `data-<snapshotId>/<table>/` (immutable, never
+  *      rewritten). [[begin]] opens a [[Pending]] snapshot; each
+  *      [[Pending.write]] starts its table's write at once, on a thread of
+  *      its own, so the tables of one snapshot are written concurrently,
+  *      and [[Pending.commit]] waits until every write has landed;
   *   2. write `manifest-<snapshotId>.json.tmp` and ATOMIC_MOVE it into
   *      place;
   *   3. atomically swap `HEAD` to point at the new manifest.
   * A crash between any two steps leaves HEAD at the parent snapshot —
   * every frontier iteration is resumable from the last committed snapshot
-  * (north_rule). Orphaned data dirs from uncommitted snapshots are ignored
-  * by readers (no manifest names them), and the next commit of that
-  * snapshot id overwrites the orphan dir in place (`mode("overwrite")`).
+  * (north_rule). So does a failed write: the commit waits for the other
+  * writes to end, writes no manifest and rethrows. Orphaned data dirs from
+  * uncommitted snapshots are ignored by readers (no manifest names them),
+  * and the next commit of that snapshot id overwrites the orphan dir in
+  * place (`mode("overwrite")`).
   *
   * Writes go through [[ForklessLocalFileSystem]], registered under its own
   * scheme in the session's Hadoop conf: it sets each new file's and
   * directory's mode with `java.nio` instead of forking `chmod`, and still
   * writes the `.crc` checksums. Manifests record plain paths, so every
   * reader opens the written files through `file:`. Each table's write
-  * time (driver wall clock) lands in the manifest metrics as
-  * `<table>_write_ms`.
+  * time (driver wall clock from its start to its end, so overlapping
+  * writes each count the time they share) lands in the manifest metrics
+  * as `<table>_write_ms`, and each write's Spark jobs carry the job
+  * description `snapshot <snapshotId> <table>`.
   *
   * At cluster scale the same layout lands on an object store: Parquet data
   * files are written by executors (distributed), only the tiny manifest
@@ -81,45 +88,103 @@ class SnapshotStore(val root: String, spark: SparkSession) {
       metrics: Map[String, Long]): Snapshot =
     commitWith(wave, tables.toSeq, _ => metrics)
 
-  /** Ordered-write commit with metrics computed AFTER the data writes but
-    * BEFORE the manifest move — so metrics can come from the written
-    * Parquet footers ([[rowCount]]) and from accumulators the write jobs
-    * populated, without any extra Spark job. `tables` is a Seq because
-    * write ORDER is part of the crawl loop's caching contract (the first
-    * write materializes the shared cached frame). The committed metrics
-    * add one `<table>_write_ms` per table to `metricsFn`'s.
+  /** [[begin]], one [[Pending.write]] per table, then [[Pending.commit]]:
+    * the tables are written concurrently, and `metricsFn` runs once all
+    * of them have landed.
     */
   def commitWith(wave: Int, tables: Seq[(String, DataFrame)],
       metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
-    val parent = head.map(_.id).getOrElse(-1L)
-    val id = parent + 1
-    val dataDir = rootPath.resolve(f"data-$id%06d")
-    val writeMs = Map.newBuilder[String, Long]
-    val written = tables.map { case (name, df) =>
-      val p = dataDir.resolve(name).toString
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").parquet(s"${ForklessLocalFileSystem.Scheme}:$p")
-      writeMs += s"${name}_write_ms" -> (System.nanoTime() - t0) / 1000000L
-      name -> p
-    }.toMap
-    val metrics = metricsFn(written) ++ writeMs.result()
-    val json = {
-      val m = SnapshotStore.Json.createObjectNode()
-        .put("id", id).put("parent", parent).put("wave", wave)
-      val ts = m.putObject("tables")
-      written.foreach { case (k, v) => ts.put(k, v) }
-      val ms = m.putObject("metrics")
-      metrics.foreach { case (k, v) => ms.put(k, v) }
-      SnapshotStore.Json.writeValueAsString(m)
+    val pending = begin(wave)
+    tables.foreach { case (name, df) => pending.write(name, df) }
+    pending.commit(metricsFn)
+  }
+
+  /** Open the next snapshot (id HEAD + 1) of `wave`; nothing is written
+    * until its tables are.
+    */
+  def begin(wave: Int): Pending = new Pending(wave)
+
+  /** A snapshot whose tables are being written. Each [[write]] starts at
+    * once on a thread of its own, made by the caller, so it inherits the
+    * caller's context class loader and Spark local properties (job group,
+    * scheduler pool). Concurrent writes that read one `.cache()`d frame
+    * compute it once: Spark builds a cached relation once and locks each
+    * of its blocks while a task builds it. A frame must therefore be
+    * cached BEFORE the first write that reads it is issued, or that write
+    * plans its own copy. Nothing outlives [[commit]], which every opened
+    * snapshot must reach.
+    */
+  class Pending protected[store] (wave: Int) {
+    private val parent = head.map(_.id).getOrElse(-1L)
+    private val id = parent + 1
+    private val dataDir = rootPath.resolve(f"data-$id%06d")
+    private val writes = scala.collection.mutable.ArrayBuffer[Write]()
+
+    private final class Write(val name: String, df: DataFrame)
+        extends Thread(s"snapshot-$id-$name") {
+      val path: String = dataDir.resolve(name).toString
+      // read by `commit` after `join`, which orders them after this thread
+      var ms = 0L
+      var error: Option[Throwable] = None
+      setDaemon(true)
+      override def run(): Unit = {
+        val t0 = System.nanoTime()
+        try {
+          spark.sparkContext.setJobDescription(s"snapshot $id $name")
+          df.write.mode("overwrite")
+            .parquet(s"${ForklessLocalFileSystem.Scheme}:$path")
+        } catch { case e: Throwable => error = Some(e) }
+        ms = (System.nanoTime() - t0) / 1000000L
+      }
     }
-    val tmp = rootPath.resolve(s"manifest-$id.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(id), StandardCopyOption.ATOMIC_MOVE)
-    val headTmp = rootPath.resolve("HEAD.tmp")
-    Files.writeString(headTmp, id.toString)
-    Files.move(headTmp, headPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    Snapshot(id, parent, wave, written, metrics)
+
+    /** Start writing `df` as table `name` of this snapshot. */
+    def write(name: String, df: DataFrame): Unit = {
+      require(!writes.exists(_.name == name),
+        s"table $name written twice in snapshot $id")
+      val w = new Write(name, df)
+      writes += w
+      w.start()
+    }
+
+    /** Wait for every write, then commit with metrics computed AFTER the
+      * data writes but BEFORE the manifest move — so metrics can come from
+      * the written Parquet footers ([[rowCount]]) and from accumulators
+      * the write jobs populated, without any extra Spark job. The committed
+      * metrics add one `<table>_write_ms` per table to `metricsFn`'s. If a
+      * write failed, the first failed one in issue order is rethrown (the
+      * others' errors suppressed in it) once every write has ended, and no
+      * manifest is written: HEAD stays at the parent.
+      */
+    def commit(
+        metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
+      writes.foreach(_.join())
+      val errors = writes.flatMap(_.error)
+      errors.headOption.foreach { first =>
+        errors.tail.foreach(first.addSuppressed)
+        throw first
+      }
+      val written = writes.map(w => w.name -> w.path).toMap
+      val metrics = metricsFn(written) ++
+        writes.map(w => s"${w.name}_write_ms" -> w.ms)
+      val json = {
+        val m = SnapshotStore.Json.createObjectNode()
+          .put("id", id).put("parent", parent).put("wave", wave)
+        val ts = m.putObject("tables")
+        written.foreach { case (k, v) => ts.put(k, v) }
+        val ms = m.putObject("metrics")
+        metrics.foreach { case (k, v) => ms.put(k, v) }
+        SnapshotStore.Json.writeValueAsString(m)
+      }
+      val tmp = rootPath.resolve(s"manifest-$id.json.tmp")
+      Files.writeString(tmp, json)
+      Files.move(tmp, manifestPath(id), StandardCopyOption.ATOMIC_MOVE)
+      val headTmp = rootPath.resolve("HEAD.tmp")
+      Files.writeString(headTmp, id.toString)
+      Files.move(headTmp, headPath, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      Snapshot(id, parent, wave, written, metrics)
+    }
   }
 
   /** Read a table out of a snapshot. */

@@ -2,7 +2,7 @@ package graft.crawl
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.fixtures.SyntheticWeb
 import graft.frontier.{FrontierEntry, PoliteScheduler}
@@ -251,6 +251,51 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       seedsDs, robotsDs, new SnapshotStore(store.root, spark), deltaCfg))
   }
 
+  test("the same crawl run three times in one JVM writes identical " +
+    "records, fetch_log and seen tables") {
+    // the four writes of a wave run concurrently: their outputs must not
+    // depend on which one reaches a shared cached frame first
+    def digest(res: CrawlLoop.Result): (Seq[String], Seq[String], Seq[Long]) = (
+      res.records.collect().map(_.toString).sorted.toSeq,
+      res.fetchLog.collect().map(_.toString).sorted.toSeq,
+      res.seen.collect().map(_.getLong(0)).sorted.toSeq)
+    val runs = (0 until 3).map(i => digest(runEngine(
+      java.nio.file.Files.createTempDirectory(s"crawl-repeat-$i"))))
+    assert(runs.head._1.nonEmpty && runs.head._2.nonEmpty)
+    assert(runs.head._3.toSet == sim.seen)
+    runs.tail.foreach(r => assert(r == runs.head))
+  }
+
+  test("a fresh crawl seeds its seen set with one bounded collect: the " +
+    "start runs at most 2 Spark jobs") {
+    // maxWaves = 0 runs only the crawl's start: robots, admission and the
+    // driver's bloom segments. At the default bloomDeltaThreshold the seed
+    // hashes come back in one limited collect (the distinct's shuffle map
+    // job and its result job); counting the seen set and the frontier
+    // apart ran 7
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    seedsDs.collect(); robotsDs.collect() // the fixtures' own setup
+    org.apache.spark.graftshim.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    val res =
+      try {
+        val r = CrawlLoop.run(spark, pagesDf, seedsDs, robotsDs,
+          new SnapshotStore(java.nio.file.Files
+            .createTempDirectory("crawl-start").toString, spark),
+          crawlCfg.copy(maxWaves = 0))
+        org.apache.spark.graftshim.ListenerBridge.drain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+    assert(res.waves == 0)
+    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
+  }
+
   test("per-wave metrics come from footers/accumulators and match the " +
     "simulator's fetch counts") {
     val dir = java.nio.file.Files.createTempDirectory("crawl-metrics")
@@ -385,12 +430,14 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     val compiles = mutable.ArrayBuffer[Long]()
     val store = new SnapshotStore(java.nio.file.Files
         .createTempDirectory("crawl-shape").toString, spark) {
-      override def commitWith(wave: Int, tables: Seq[(String, DataFrame)],
-          metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
-        val snap = super.commitWith(wave, tables, metricsFn)
-        compiles += org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount
-        snap
+      override def begin(wave: Int): Pending = new Pending(wave) {
+        override def commit(
+            metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
+          val snap = super.commit(metricsFn)
+          compiles += org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME.getCount
+          snap
+        }
       }
     }
     // at the default bloomMinSeen a crawl this small never probes the

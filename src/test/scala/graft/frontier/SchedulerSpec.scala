@@ -71,8 +71,9 @@ class SchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 6000L).map(entry("hot.example.org", _))).sortBy(_.urlHash)
     val frontier = spark.createDataset(spark.sparkContext.parallelize(rows, parts))
     // each partition holds more hot rows than TopKByRank buffers before
-    // it compacts (1,024 at budgets ≤ 512), so `reduce` compacts there; at
-    // budget 1,000 two partitions' buffers pass 2,000 in `merge`
+    // it compacts (2 × budget, at most 1,024 at budgets ≤ 512), so
+    // `reduce` compacts there; at budget 1,000 two partitions' buffers pass
+    // 2,000 in `merge`
     val hotPerPart = frontier.mapPartitions(it =>
       Iterator(it.count(_.host == "hot.example.org"))).collect()
     assert(hotPerPart.length == parts && hotPerPart.forall(_ > 1024),
@@ -85,6 +86,24 @@ class SchedulerSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark.sparkContext.broadcast(robots), 7000L, cfg).collect().toSeq
       assert(norm(got) == norm(model(rows, budget, 7000L, 1000L)),
         s"schedule differs from the model at budget=$budget")
+    }
+  }
+
+  test("a top-k buffer holds at most 2 × budget entries after any " +
+    "reduce or merge, and finishes to the model's first budget") {
+    val rows = (0L until 5000L).map(entry("hot.example.org", _))
+    for (budget <- Seq(1, 512)) {
+      val agg = new PoliteScheduler.TopKByRank(budget)
+      def fold(es: Seq[FrontierEntry]) = es.foldLeft(agg.zero) { (b, e) =>
+        val next = agg.reduce(b, e)
+        assert(next.length <= 2 * budget, s"reduce at budget=$budget")
+        next
+      }
+      val (left, right) = rows.splitAt(2000)
+      val merged = agg.merge(fold(left), fold(right))
+      assert(merged.length <= 2 * budget, s"merge at budget=$budget")
+      assert(agg.finish(merged) == rows.sortBy(e =>
+        (e.seed, e.depth, e.pageIdx, e.posInPage, e.urlHash)).take(budget))
     }
   }
 

@@ -2,13 +2,17 @@ package graft.store
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
 /** Commit-protocol guarantees: atomic manifest, HEAD only moves on full
-  * commit, orphaned data from a crashed commit is invisible to readers.
+  * commit, orphaned data from a crashed commit is invisible to readers,
+  * concurrent table writes each tagged with their table and joined before
+  * the manifest.
   */
 class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -52,6 +56,67 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s1 = store2.commit(1, Map("t" -> Seq(7).toDF("x")), Map.empty)
     assert(s1.id == 1 && store2.head.get.id == 1)
     assert(store2.table(s1, "t").get.collect().map(_.getInt(0)).toSeq == Seq(7))
+  }
+
+  test("a write that fails while another is still running: commit waits " +
+    "for the other, rethrows the failure, writes no manifest and leaves " +
+    "HEAD at the parent") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("store-fail").toString
+    val store = new SnapshotStore(root, spark)
+    store.commit(0, Map("t" -> Seq(1).toDF("x")), Map.empty)
+
+    val pending = store.begin(1)
+    val t0 = System.nanoTime()
+    pending.write("slow", spark.range(0, 1, 1, 1)
+      .map { x => Thread.sleep(1500); x }.toDF("x"))
+    pending.write("bad", spark.range(0, 1, 1, 1)
+      .map { x => if (x >= 0) throw new IllegalStateException("boom"); x }
+      .toDF("x"))
+    val err = intercept[Exception](pending.commit(_ => Map.empty))
+    val waitedMs = (System.nanoTime() - t0) / 1000000L
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.toString.contains("boom")), err)
+    // the failure surfaced only once the slow write had landed
+    assert(waitedMs >= 1500, waitedMs)
+    assert(Files.exists(Paths.get(root, "data-000001", "slow", "_SUCCESS")))
+    assert(!Files.exists(Paths.get(root, "manifest-000001.json")))
+    assert(store.head.get.id == 0 && store.snapshots == Seq(0L))
+
+    val store2 = new SnapshotStore(root, spark)
+    assert(store2.head.get.id == 0)
+    val s1 = store2.commit(1, Map("t" -> Seq(7).toDF("x")), Map.empty)
+    assert(s1.id == 1 && s1.parent == 0 && store2.head.get.id == 1)
+    assert(store2.table(s1, "t").get.collect().map(_.getInt(0)).toSeq == Seq(7))
+  }
+
+  test("every job of a commit carries its table's description " +
+    "`snapshot <id> <table>`") {
+    val sc = spark.sparkContext
+    val store = new SnapshotStore(
+      Files.createTempDirectory("store-desc").toString, spark)
+    // (description, tasks) of each job; a write of an n-partition range
+    // runs one n-task job, so the task counts tie each job to its table
+    val jobs = new ConcurrentLinkedQueue[(String, Int)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add((Option(j.properties)
+          .map(_.getProperty("spark.job.description")).orNull,
+          j.stageInfos.map(_.numTasks).sum))
+    }
+    sc.addSparkListener(listener)
+    val snap =
+      try {
+        val s = store.commit(0, Map("a" -> spark.range(0, 10, 1, 1).toDF(),
+          "b" -> spark.range(0, 30, 1, 3).toDF()), Map.empty)
+        org.apache.spark.graftshim.ListenerBridge.drain(sc)
+        s
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.asScala.toSeq.groupMapReduce(_._1)(_._2)(_ + _) ==
+      Map("snapshot 0 a" -> 1, "snapshot 0 b" -> 3), jobs)
+    assert(snap.metrics.keySet == Set("a_write_ms", "b_write_ms"))
+    // the description stays on the write threads
+    assert(sc.getLocalProperty("spark.job.description") == null)
   }
 
   test("torn manifest tmp file is ignored (only ATOMIC_MOVEd manifests " +
