@@ -6,6 +6,7 @@ import graft.crawl.{CrawlLoop, PageParsers}
 import graft.fixtures.SyntheticWeb
 import graft.frontier.PoliteScheduler
 import graft.sources.BucketedPages
+import graft.store.TableReader
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds
   * plus the north-rule scaling evidence.
@@ -84,7 +85,7 @@ object Bench {
     */
   def parsePipeline(s: SparkSession, pagesDir: String): Long = {
     import s.implicits._
-    s.read.parquet(pagesDir)
+    TableReader.read(s, pagesDir)
       .select(col("url"), col("html"))
       .as[(String, Array[Byte])]
       .map { case (u, htmlBytes) =>
@@ -323,9 +324,9 @@ object Bench {
     val webDir = benchRoot.toString + "/pages"
     val bucketDir = benchRoot.toString + "/pages_bucketed"
     SyntheticWeb.pages(spark, bigCfg).write.mode("overwrite").parquet(webDir)
-    BucketedPages.write(spark, spark.read.parquet(webDir), "bench_wave_pages",
-      nBuckets = 64, path = Some(bucketDir))
-    val nPages = spark.read.parquet(webDir).count()
+    BucketedPages.write(spark, TableReader.read(spark, webDir),
+      "bench_wave_pages", nBuckets = 64, path = Some(bucketDir))
+    val nPages = TableReader.read(spark, webDir).count()
 
     // Interleaved min-of-N per leg (see scaladoc): rep-major loop order so
     // a CPU-steal burst poisons at most one rep of each leg, not all reps

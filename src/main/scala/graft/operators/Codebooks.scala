@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
 
 import graft.functions.VecKernels
 
@@ -83,31 +84,42 @@ object Codebooks {
       ((((j.toLong * 64 + i) * 2654435761L) % 2003L - 1001L) / 1024.0).toFloat
     }
 
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap[String, Array[Array[Float]]]()
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[String, Array[Double]]()
+  // one entry per table path, holding (table version, codebook): a
+  // rewritten embeddings table retrains and replaces its path's entry, so
+  // N rewrites in one session hold one codebook per cache, not N
+  private[operators] val ivfCache =
+    TrieMap[String, (String, Array[Array[Float]])]()
+  private[operators] val pqCache =
+    TrieMap[String, (String, Array[Double])]()
 
-  /** Cache key: dir + table-version fingerprint, so a rewritten
-    * embeddings table at the same path retrains instead of silently
-    * serving stale centroids (at scale the fingerprint is the table
-    * snapshot id).
+  /** `dir`'s entry of `cache` if it was trained on the current embeddings
+    * table version (at scale the version is the table snapshot id), else
+    * `train`'s result, which replaces the entry.
     */
-  private def cacheKey(dir: String): String =
-    s"$dir@${CoreQueries.tableVersion(dir, "embeddings")}"
+  private def memo[A](cache: TrieMap[String, (String, A)], dir: String)(
+      train: => A): A = {
+    val v = CoreQueries.tableVersion(dir, "embeddings")
+    cache.get(dir) match {
+      case Some((`v`, a)) => a
+      case _ =>
+        val a = train
+        cache.put(dir, (v, a))
+        a
+    }
+  }
 
   /** Trained IVF centroids for the table at `dir` (memoized per table
     * version).
     */
   def ivf(s: SparkSession, dir: String): Array[Array[Float]] =
-    ivfCache.getOrElseUpdate(cacheKey(dir),
+    memo(ivfCache, dir)(
       trainIvf(t(s, dir, "embeddings").select(col("embedding"))))
 
   /** Trained flattened PQ codebook for the table at `dir` (memoized per
     * table version; [[graft.functions.VecKernels.pqInitCodebook]] layout).
     */
   def pq(s: SparkSession, dir: String): Array[Double] =
-    pqCache.getOrElseUpdate(cacheKey(dir),
+    memo(pqCache, dir)(
       trainPq(t(s, dir, "embeddings").select(col("embedding"))))
 
   /** Pay both trainings eagerly (the bench times this under its own key

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 
+import graft.store.TableReader
+
 /** Relational operators from the reference, re-expressed Spark-first over
   * the driver testdata tables, each paired with a DuckDB oracle in its
   * [[graft.SparkEntry.registry]] entry.
@@ -20,35 +22,22 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   */
 object CoreQueries {
 
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Cheap table-version fingerprint — the cache key component that
-    * invalidates the per-table memoizations ([[Codebooks]], the q21/q60
-    * shared edge set) when a table at the same path is rewritten within
-    * a session. Hashes every file's (name, size, mtime): Spark part
-    * files carry a fresh task UUID in their NAME on every write, so two
-    * rewrites are distinguished even when they land in the same
-    * filesystem mtime tick with identical byte totals (mtime+bytes
-    * alone misses that). The local-FS stand-in for a real table
-    * format's snapshot id.
+  /** The driver table `name` under `dir`, read through
+    * [[graft.store.TableReader]]: the first read of a table version infers
+    * its Parquet schema with one Spark job, and every later read of that
+    * version in the session passes the schema and starts no job.
     */
-  def tableVersion(dir: String, name: String): String = {
-    val p = java.nio.file.Paths.get(dir, s"$name.parquet")
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      val st = java.nio.file.Files.walk(p)
-      try st.forEach { f =>
-        if (java.nio.file.Files.isRegularFile(f)) {
-          entries += s"${p.relativize(f)}:${java.nio.file.Files.size(f)}:" +
-            java.nio.file.Files.getLastModifiedTime(f).toMillis
-        }
-      } finally st.close()
-      java.lang.Long.toHexString(entries.sorted.mkString("\n").hashCode
-        .toLong & 0xFFFFFFFFL) + s":${entries.size}"
-    }
-  }
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    TableReader.read(s, s"$dir/$name.parquet")
+
+  /** Version fingerprint of the driver table `name` under `dir`
+    * ([[graft.store.TableReader.version]], a SHA-256 of its file listing):
+    * the key that invalidates the per-table memos ([[t]]'s schema,
+    * [[Codebooks]], the q21/q60 shared edge set) when a table at the same
+    * path is rewritten within a session.
+    */
+  def tableVersion(dir: String, name: String): String =
+    TableReader.version(s"$dir/$name.parquet")
 
   /** A1 (new.py:75-82): per-key counts pivoted wide. Explicit pivot values
     * → single-pass hash agg, no extra distinct-values job.

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.TableReader
 
 /** Bucketed storage for the pages table: co-locates rows by `url_hash`
   * so the per-wave fetch join (frontier ⋈ pages) needs NO shuffle of the
@@ -56,7 +57,7 @@ object BucketedPages {
     */
   def register(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 32): Unit = {
-    val schemaDdl = spark.read.parquet(path).schema.toDDL
+    val schemaDdl = TableReader.read(spark, path).schema.toDDL
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(
       s"""CREATE TABLE $table ($schemaDdl) USING parquet

@@ -190,7 +190,7 @@ class SnapshotStore(val root: String, spark: SparkSession) {
   /** Read a table out of a snapshot. */
   def table(snap: Snapshot, name: String): Option[DataFrame] =
     snap.tables.get(name).filter(p => Files.exists(Paths.get(p)))
-      .map(spark.read.parquet(_))
+      .map(TableReader.read(spark, _))
 
   /** Row count of a written table from Parquet FOOTERS only — a pure
     * driver-side metadata read, NO Spark job. This is how the crawl loop

@@ -91,6 +91,36 @@ class CodebooksSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Codebooks.pq(spark, real) eq Codebooks.pq(spark, real))
   }
 
+  test("a rewritten embeddings table retrains and replaces its dir's " +
+    "entry: one entry per cache, holding the new table's codebooks") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("codebooks-rewrite")
+      .toString
+    val path = s"$dir/embeddings.parquet"
+    def write(seed: Int): DataFrame = {
+      val rnd = new scala.util.Random(seed)
+      val df = Seq.fill(200)(Tuple1(Seq.fill(64)((rnd.nextDouble() * 2 - 1)
+        .toFloat))).toDF("embedding")
+      df.write.mode("overwrite").parquet(path)
+      df
+    }
+    def entries: (Int, Int) = (Codebooks.ivfCache.size, Codebooks.pqCache.size)
+
+    write(1)
+    Codebooks.trainAll(spark, dir)
+    val (ivf1, pq1) = (Codebooks.ivf(spark, dir), Codebooks.pq(spark, dir))
+    val after1 = entries
+    val df2 = write(2)
+    Codebooks.trainAll(spark, dir)
+    assert(entries == after1, "a rewrite added cache entries")
+    val (ivf2, pq2) = (Codebooks.ivf(spark, dir), Codebooks.pq(spark, dir))
+    assert(ivf2.map(_.toSeq).toSeq != ivf1.map(_.toSeq).toSeq)
+    assert(pq2.toSeq != pq1.toSeq)
+    assert(ivf2.map(_.toSeq).toSeq ==
+      Codebooks.trainIvf(df2).map(_.toSeq).toSeq)
+    assert(pq2.toSeq == Codebooks.trainPq(df2).toSeq)
+  }
+
   private def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     (0 until 64).foreach { i =>
