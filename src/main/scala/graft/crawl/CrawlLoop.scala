@@ -41,8 +41,9 @@ import graft.url.UrlCanon
   *     earlier one built. No action is a metric: all count metrics
   *     (scheduled / records / new_links, the loop's own frontier-count
   *     termination check, and a resume's starting seen and frontier
-  *     counts) come from the written Parquet FOOTERS (driver-side
-  *     metadata, no job — [[SnapshotStore.rowCount]]); fetched_ok /
+  *     counts) come from the manifest, whose file list carries each
+  *     written file's row count as its task returned it (no footer
+  *     opened, no job — [[SnapshotStore.rowCount]]); fetched_ok /
   *     retries ride the fetch_log write as accumulators; the manifest adds
   *     driver times: `plan_ms` (loop top to the LAST write issued; the
   *     first write starts once the fetch join is planned) and the store's
@@ -188,7 +189,7 @@ object CrawlLoop extends Serializable {
         .as[FrontierEntry]
 
     // resume (north_rule): pick up from the last committed snapshot, with
-    // its counts from the Parquet footers (the seen deltas are distinct by
+    // its counts from the manifests (the seen deltas are distinct by
     // construction, so their row counts sum to the seen-set size)
     val head = store.head
     val startWave = head.fold(0)(_.wave + 1)
@@ -207,7 +208,7 @@ object CrawlLoop extends Serializable {
     // hashes; a larger one builds the segments DISTRIBUTED
     // (UrlSeen.buildSegments) and collects only the nBuckets-row segment
     // table — the driver never sees a hash. A resume sizes the set from
-    // the seen deltas' footers. A fresh crawl asks for at most
+    // the seen deltas' manifest counts. A fresh crawl asks for at most
     // bloomDeltaThreshold seed hashes in ONE bounded action: fewer back
     // are the whole set, and a full batch is counted instead.
     val segMap = scala.collection.mutable.Map[Int, Array[Long]]()
@@ -215,7 +216,9 @@ object CrawlLoop extends Serializable {
     val seenHashes = seen.select(col("url_hash")).as[Long]
     val (startSeen, smallSeen) = head match {
       case Some(_) =>
-        val n = deltaPaths(store, "seen_w").map(store.rowCount).sum
+        val n = store.snapshots.map(store.readManifest).map(_.files.collect {
+          case (t, fs) if t.startsWith("seen_w") => SnapshotStore.rowCount(fs)
+        }.sum).sum
         (n, Option.when(n < cfg.bloomDeltaThreshold)(seenHashes.collect()))
       case None =>
         val hs = seenHashes
@@ -377,16 +380,18 @@ object CrawlLoop extends Serializable {
       var metrics = Map.empty[String, Long]
       val planMs = (System.nanoTime() - waveT0) / 1000000L
       val snap = snapshot.commit { written =>
-        // footer-only metadata counts — zero extra Spark jobs
+        // the written files' row counts — zero extra Spark jobs
+        def rows(table: String) = SnapshotStore.rowCount(written(table))
         metrics = Map(
-          "scheduled" -> store.rowCount(written(s"fetch_log_w$wave")),
+          "scheduled" -> rows(s"fetch_log_w$wave"),
           // *_approx: accumulator-derived — a task retry or speculative
-          // duplicate can inflate them (the footer-derived siblings are
-          // exact; recompute exact ok/retryable from fetch_log statuses
-          // when it matters, as q43 does)
+          // duplicate can inflate them (the row-count siblings are
+          // exact: only one attempt per partition is published; recompute
+          // exact ok/retryable from fetch_log statuses when it matters,
+          // as q43 does)
           "fetched_ok_approx" -> okAcc.value.toLong,
-          "records" -> store.rowCount(written(s"records_w$wave")),
-          "new_links" -> (store.rowCount(written(s"seen_w$wave")) - seedCount),
+          "records" -> rows(s"records_w$wave"),
+          "new_links" -> (rows(s"seen_w$wave") - seedCount),
           "retries_approx" -> retryAcc.value.toLong,
           // driver time from the loop top to the last write issued
           "plan_ms" -> planMs

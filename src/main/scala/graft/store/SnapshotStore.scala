@@ -5,11 +5,14 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import SnapshotStore.DataFile
+
 /** Iceberg-style snapshot store: immutable Parquet data files under an
-  * atomically-committed JSON manifest (snapshot id, parent id, per-table
-  * file lists, per-partition lineage, metrics). Real Iceberg is not on the
-  * offline classpath (SURVEY.md §7.3), so this implements the same
-  * contract behind a small surface; an Iceberg catalog can slot in later
+  * atomically-committed JSON manifest (snapshot id, parent id, each
+  * table's directory and its data files with their rows, bytes and
+  * writing partition, metrics). Real Iceberg is not on the offline
+  * classpath (SURVEY.md §7.3), so this implements the same contract
+  * behind a small surface; an Iceberg catalog can slot in later
   * unchanged.
   *
   * Commit protocol (single-writer, crash-safe):
@@ -17,17 +20,24 @@ import scala.jdk.CollectionConverters._
   *      rewritten). [[begin]] opens a [[Pending]] snapshot; each
   *      [[Pending.write]] starts its table's write at once, on a thread of
   *      its own, so the tables of one snapshot are written concurrently,
-  *      and [[Pending.commit]] waits until every write has landed;
-  *   2. write `manifest-<snapshotId>.json.tmp` and ATOMIC_MOVE it into
-  *      place;
+  *      and [[Pending.commit]] waits until every write has landed. A write
+  *      is one Spark job through [[TableWriter]]: each task writes its
+  *      partition to a hidden `_`-prefixed attempt file and returns it
+  *      with its row and byte counts, and the driver renames exactly the
+  *      returned files to their published `part-*` names and deletes any
+  *      other attempt file. There is no Hadoop task commit, no
+  *      `_temporary` tree and no `_SUCCESS` marker: the manifest is the
+  *      commit;
+  *   2. write `manifest-<snapshotId>.json.tmp`, listing every published
+  *      file under `files`, and ATOMIC_MOVE it into place;
   *   3. atomically swap `HEAD` to point at the new manifest.
   * A crash between any two steps leaves HEAD at the parent snapshot —
   * every frontier iteration is resumable from the last committed snapshot
   * (north_rule). So does a failed write: the commit waits for the other
   * writes to end, writes no manifest and rethrows. Orphaned data dirs from
   * uncommitted snapshots are ignored by readers (no manifest names them),
-  * and the next commit of that snapshot id overwrites the orphan dir in
-  * place (`mode("overwrite")`).
+  * and the next commit of that snapshot id replaces the orphan dir
+  * (deleted, then written afresh, as `mode("overwrite")` would).
   *
   * Writes go through [[ForklessLocalFileSystem]], registered under its own
   * scheme in the session's Hadoop conf: it sets each new file's and
@@ -36,12 +46,15 @@ import scala.jdk.CollectionConverters._
   * reader opens the written files through `file:`. Each table's write
   * time (driver wall clock from its start to its end, so overlapping
   * writes each count the time they share) lands in the manifest metrics
-  * as `<table>_write_ms`, and each write's Spark jobs carry the job
-  * description `snapshot <snapshotId> <table>`.
+  * as `<table>_write_ms`, beside `<table>_files` and `<table>_bytes`
+  * summed from the write's task results; each write's Spark jobs carry
+  * the job description `snapshot <snapshotId> <table>`. Row counts
+  * ([[rowCount]], [[tableRowCount]]) are read from the manifest's file
+  * list: no footer is opened and no directory listed.
   *
   * At cluster scale the same layout lands on an object store: Parquet data
   * files are written by executors (distributed), only the tiny manifest
-  * JSON passes through the driver.
+  * JSON and one rename per data file pass through the driver.
   */
 class SnapshotStore(val root: String, spark: SparkSession) {
 
@@ -55,7 +68,8 @@ class SnapshotStore(val root: String, spark: SparkSession) {
   // nested case class's equals cannot check its outer store
   @scala.annotation.nowarn("msg=outer reference")
   final case class Snapshot(id: Long, parent: Long, wave: Int,
-      tables: Map[String, String], metrics: Map[String, Long])
+      tables: Map[String, String], metrics: Map[String, Long],
+      files: Map[String, Seq[DataFile]])
 
   private def manifestPath(id: Long): Path =
     rootPath.resolve(f"manifest-$id%06d.json")
@@ -78,7 +92,11 @@ class SnapshotStore(val root: String, spark: SparkSession) {
       field(k).properties.asScala.map(e => e.getKey -> e.getValue).toMap
     Snapshot(field("id").asLong, field("parent").asLong, field("wave").asInt,
       obj("tables").map { case (k, v) => k -> v.asText },
-      obj("metrics").map { case (k, v) => k -> v.asLong })
+      obj("metrics").map { case (k, v) => k -> v.asLong },
+      obj("files").map { case (k, v) => k -> v.elements.asScala.map { f =>
+        DataFile(f.get("path").asText, f.get("rows").asLong,
+          f.get("bytes").asLong, f.get("partition").asInt)
+      }.toSeq })
   }
 
   /** Write tables + commit a new snapshot; returns it. `metrics` carries the
@@ -93,7 +111,7 @@ class SnapshotStore(val root: String, spark: SparkSession) {
     * of them have landed.
     */
   def commitWith(wave: Int, tables: Seq[(String, DataFrame)],
-      metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
+      metricsFn: Map[String, Seq[DataFile]] => Map[String, Long]): Snapshot = {
     val pending = begin(wave)
     tables.foreach { case (name, df) => pending.write(name, df) }
     pending.commit(metricsFn)
@@ -125,14 +143,14 @@ class SnapshotStore(val root: String, spark: SparkSession) {
       val path: String = dataDir.resolve(name).toString
       // read by `commit` after `join`, which orders them after this thread
       var ms = 0L
+      var files = Seq.empty[DataFile]
       var error: Option[Throwable] = None
       setDaemon(true)
       override def run(): Unit = {
         val t0 = System.nanoTime()
         try {
           spark.sparkContext.setJobDescription(s"snapshot $id $name")
-          df.write.mode("overwrite")
-            .parquet(s"${ForklessLocalFileSystem.Scheme}:$path")
+          files = TableWriter.write(df, path)
         } catch { case e: Throwable => error = Some(e) }
         ms = (System.nanoTime() - t0) / 1000000L
       }
@@ -149,29 +167,40 @@ class SnapshotStore(val root: String, spark: SparkSession) {
 
     /** Wait for every write, then commit with metrics computed AFTER the
       * data writes but BEFORE the manifest move — so metrics can come from
-      * the written Parquet footers ([[rowCount]]) and from accumulators
-      * the write jobs populated, without any extra Spark job. The committed
-      * metrics add one `<table>_write_ms` per table to `metricsFn`'s. If a
-      * write failed, the first failed one in issue order is rethrown (the
-      * others' errors suppressed in it) once every write has ended, and no
-      * manifest is written: HEAD stays at the parent.
+      * the written files' counts (`metricsFn` gets each table's files, see
+      * [[SnapshotStore.rowCount]]) and from accumulators the write jobs
+      * populated, without any extra Spark job. The committed metrics add
+      * `<table>_write_ms`, `<table>_files` and `<table>_bytes` per table to
+      * `metricsFn`'s. If a write failed, the first failed one in issue
+      * order is rethrown (the others' errors suppressed in it) once every
+      * write has ended, and no manifest is written: HEAD stays at the
+      * parent.
       */
-    def commit(
-        metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
+    def commit(metricsFn: Map[String, Seq[DataFile]] => Map[String, Long])
+        : Snapshot = {
       writes.foreach(_.join())
       val errors = writes.flatMap(_.error)
       errors.headOption.foreach { first =>
         errors.tail.foreach(first.addSuppressed)
         throw first
       }
-      val written = writes.map(w => w.name -> w.path).toMap
-      val metrics = metricsFn(written) ++
-        writes.map(w => s"${w.name}_write_ms" -> w.ms)
+      val tables = writes.map(w => w.name -> w.path).toMap
+      val files = writes.map(w => w.name -> w.files).toMap
+      val metrics = metricsFn(files) ++ writes.flatMap(w => Seq(
+        s"${w.name}_write_ms" -> w.ms,
+        s"${w.name}_files" -> w.files.size.toLong,
+        s"${w.name}_bytes" -> w.files.map(_.bytes).sum))
       val json = {
         val m = SnapshotStore.Json.createObjectNode()
           .put("id", id).put("parent", parent).put("wave", wave)
         val ts = m.putObject("tables")
-        written.foreach { case (k, v) => ts.put(k, v) }
+        tables.foreach { case (k, v) => ts.put(k, v) }
+        val fs = m.putObject("files")
+        files.foreach { case (k, v) =>
+          val a = fs.putArray(k)
+          v.foreach(f => a.addObject().put("path", f.path).put("rows", f.rows)
+            .put("bytes", f.bytes).put("partition", f.partition))
+        }
         val ms = m.putObject("metrics")
         metrics.foreach { case (k, v) => ms.put(k, v) }
         SnapshotStore.Json.writeValueAsString(m)
@@ -183,7 +212,7 @@ class SnapshotStore(val root: String, spark: SparkSession) {
       Files.writeString(headTmp, id.toString)
       Files.move(headTmp, headPath, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
-      Snapshot(id, parent, wave, written, metrics)
+      Snapshot(id, parent, wave, tables, metrics, files)
     }
   }
 
@@ -192,39 +221,11 @@ class SnapshotStore(val root: String, spark: SparkSession) {
     snap.tables.get(name).filter(p => Files.exists(Paths.get(p)))
       .map(TableReader.read(spark, _))
 
-  /** Row count of a written table from Parquet FOOTERS only — a pure
-    * driver-side metadata read, NO Spark job. This is how the crawl loop
-    * keeps per-wave metrics (scheduled/records/new_links and the loop's
-    * own frontier-count termination check) free: the counts ride on the
-    * four snapshot writes instead of adding count() jobs (the r1 loop
-    * spent ~10 jobs/wave, half of them metric counts).
+  /** Row count of table `name` of `snap`, from its manifest's file list
+    * ([[SnapshotStore.rowCount]]); 0 for a table the snapshot lacks.
     */
-  def rowCount(path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    // read options from the conf in hand: ParquetFileReader.open(file)
-    // alone builds a fresh Configuration (re-parsing the default XML) per
-    // footer
-    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
-    val it = fs.listStatus(dir).iterator
-    var total = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
-        try total += r.getRecordCount
-        finally r.close()
-      }
-    }
-    total
-  }
-
   def tableRowCount(snap: Snapshot, name: String): Long =
-    snap.tables.get(name).map(rowCount).getOrElse(0L)
+    snap.files.get(name).fold(0L)(SnapshotStore.rowCount)
 
   /** All COMMITTED snapshot ids, ascending — by walking the parent chain
     * from HEAD, not by listing manifest files: a crash between the
@@ -247,6 +248,22 @@ class SnapshotStore(val root: String, spark: SparkSession) {
 }
 
 object SnapshotStore {
+
+  /** One published data file of a table: its plain path, its rows and
+    * bytes, and the id of the Spark partition that wrote it.
+    */
+  final case class DataFile(path: String, rows: Long, bytes: Long,
+      partition: Int)
+
+  /** Row count of a table from its files' manifest entries — no footer
+    * opened, no Spark job. This is how the crawl loop keeps per-wave
+    * metrics (scheduled/records/new_links and the loop's own
+    * frontier-count termination check) free: the counts ride on the four
+    * snapshot writes instead of adding count() jobs (the r1 loop spent
+    * ~10 jobs/wave, half of them metric counts).
+    */
+  def rowCount(files: Seq[DataFile]): Long = files.map(_.rows).sum
+
   // manifests are JSON: strings escaped on write, parsed as JSON strings on
   // read, so a path or name holding `,` `"` `}` round-trips
   private val Json = new ObjectMapper()

@@ -142,7 +142,7 @@ object StreamOps {
       store.commitWith(math.min(epochId, Int.MaxValue.toLong).toInt,
         Seq(table -> batch),
         written => Map("epoch" -> epochId,
-          "rows" -> written.values.map(store.rowCount).sum))
+          "rows" -> written.values.map(graft.store.SnapshotStore.rowCount).sum))
     }
   }
 

@@ -309,6 +309,38 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"engine=$perWaveScheduled sim=$simPerWave")
   }
 
+  test("manifest row counts equal the Parquet footers and count() for " +
+    "every table of a crawl_deep-shaped crawl") {
+    // perfbench's crawl_deep web and budget: one hot host far over a
+    // 32-URL budget, so later waves are small and budget-bound
+    val web = SyntheticWeb.Config(seed = 7L, nHosts = 8, pagesPerHost = 2,
+      itemsPerPage = 16, blogDepth = 1, blogFanout = 2, skewFactor = 8.0)
+    val store = new SnapshotStore(java.nio.file.Files
+      .createTempDirectory("crawl-counts").toString, spark)
+    CrawlLoop.run(spark, SyntheticWeb.pages(spark, web),
+      SyntheticWeb.seeds(spark, web), SyntheticWeb.robots(spark, web), store,
+      CrawlLoop.Config(scheduler = PoliteScheduler.Config(hostBudget = 32,
+        defaultDelayMs = 1L), maxWaves = 4))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footerRows(path: String): Long = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), conf))
+      try r.getRecordCount finally r.close()
+    }
+    val snaps = store.snapshots.map(store.readManifest)
+    assert(snaps.size == 4)
+    for (s <- snaps; (table, path) <- s.tables) {
+      val files = s.files(table)
+      val manifest = store.tableRowCount(s, table)
+      assert(manifest == files.map(f => footerRows(f.path)).sum, table)
+      assert(manifest == spark.read.parquet(path).count(), table)
+    }
+    assert(snaps.forall(s => s.tables.size == 4 &&
+      s.metrics("scheduled") == store.tableRowCount(s, s"fetch_log_w${s.wave}")))
+    assert(snaps.map(s => store.tableRowCount(s, s"records_w${s.wave}")).sum > 0)
+  }
+
   test("ordering invariance under repartition: records identical at " +
     "different parallelism") {
     // second full engine run in the same session but different shuffle
@@ -431,8 +463,8 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = new SnapshotStore(java.nio.file.Files
         .createTempDirectory("crawl-shape").toString, spark) {
       override def begin(wave: Int): Pending = new Pending(wave) {
-        override def commit(
-            metricsFn: Map[String, String] => Map[String, Long]): Snapshot = {
+        override def commit(metricsFn: Map[String,
+            Seq[SnapshotStore.DataFile]] => Map[String, Long]): Snapshot = {
           val snap = super.commit(metricsFn)
           compiles += org.apache.spark.metrics.source.CodegenMetrics
             .METRIC_COMPILATION_TIME.getCount

@@ -79,7 +79,11 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .exists(_.toString.contains("boom")), err)
     // the failure surfaced only once the slow write had landed
     assert(waitedMs >= 1500, waitedMs)
-    assert(Files.exists(Paths.get(root, "data-000001", "slow", "_SUCCESS")))
+    // the slow write published its one data file
+    val slow = Paths.get(root, "data-000001", "slow")
+    assert(scala.util.Using.resource(Files.list(slow))(_.iterator.asScala
+      .map(_.getFileName.toString)
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet"))) == 1)
     assert(!Files.exists(Paths.get(root, "manifest-000001.json")))
     assert(store.head.get.id == 0 && store.snapshots == Seq(0L))
 
@@ -114,7 +118,14 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       } finally sc.removeSparkListener(listener)
     assert(jobs.asScala.toSeq.groupMapReduce(_._1)(_._2)(_ + _) ==
       Map("snapshot 0 a" -> 1, "snapshot 0 b" -> 3), jobs)
-    assert(snap.metrics.keySet == Set("a_write_ms", "b_write_ms"))
+    assert(snap.metrics.keySet == Set("a_write_ms", "b_write_ms",
+      "a_files", "b_files", "a_bytes", "b_bytes"))
+    // file counts and bytes come from the write's task results
+    assert(snap.metrics("a_files") == 1 && snap.metrics("b_files") == 3)
+    Seq("a", "b").foreach { t =>
+      assert(snap.metrics(s"${t}_bytes") ==
+        snap.files(t).map(f => Files.size(Paths.get(f.path))).sum)
+    }
     // the description stays on the write threads
     assert(sc.getLocalProperty("spark.job.description") == null)
   }
@@ -143,7 +154,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.tables == s0.tables && back.tables("t").contains(","))
     assert(back.metrics("a,b\"c}") == 2L)
     assert(reopened.table(back, "t").get.count() == 2)
-    assert(reopened.rowCount(back.tables("u")) == 1)
+    assert(back.files == s0.files && reopened.tableRowCount(back, "u") == 1)
   }
 
   test("forkless commits keep the modes and .crc checksums of a plain " +
@@ -168,8 +179,13 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.toMap
       finally walk.close()
     }
+    // the store's writer publishes data files without Hadoop's job commit,
+    // so the one difference is the plain write's _SUCCESS marker
+    val marker = Set("_SUCCESS", "._SUCCESS.crc")
     val got = modes(committed)
-    assert(got == modes(plain))
+    val plainModes = modes(plain)
+    assert(marker.subsetOf(plainModes.keySet))
+    assert(got == plainModes -- marker)
     assert(got.keys.count(_.endsWith(".parquet")) == 2)
     assert(got.keys.count(_.endsWith(".parquet.crc")) == 2)
 
