@@ -190,8 +190,12 @@ object CrawlLoop extends Serializable {
 
     // resume (north_rule): pick up from the last committed snapshot, with
     // its counts from the manifests (the seen deltas are distinct by
-    // construction, so their row counts sum to the seen-set size)
+    // construction, so their row counts sum to the seen-set size). The
+    // manifest chain is read once here; each wave then appends the seen
+    // delta it committed.
     val head = store.head
+    val chain = store.snapshots.map(store.readManifest)
+    var seenPaths = deltaPaths(chain, "seen_w")
     val startWave = head.fold(0)(_.wave + 1)
     var frontier = head match {
       case Some(snap) => readFrontier(snap)
@@ -201,7 +205,7 @@ object CrawlLoop extends Serializable {
     var seen: DataFrame =
       if (head.isEmpty)
         frontier.select(col("urlHash").as("url_hash")).distinct().toDF()
-      else seenUnion(spark, store)
+      else seenUnion(spark, seenPaths)
 
     // driver-side Bloom segment map, seeded ONCE per crawl from the
     // starting seen set: a set below bloomDeltaThreshold is collected as
@@ -216,7 +220,7 @@ object CrawlLoop extends Serializable {
     val seenHashes = seen.select(col("url_hash")).as[Long]
     val (startSeen, smallSeen) = head match {
       case Some(_) =>
-        val n = store.snapshots.map(store.readManifest).map(_.files.collect {
+        val n = chain.map(_.files.collect {
           case (t, fs) if t.startsWith("seen_w") => SnapshotStore.rowCount(fs)
         }.sum).sum
         (n, Option.when(n < cfg.bloomDeltaThreshold)(seenHashes.collect()))
@@ -404,7 +408,8 @@ object CrawlLoop extends Serializable {
       // reload state from the committed snapshot: truncates lineage so
       // wave N+1's plan is independent of wave N's
       frontier = readFrontier(snap)
-      seen = seenUnion(spark, store)
+      seenPaths :+= snap.tables(s"seen_w$wave")
+      seen = seenUnion(spark, seenPaths)
       frontierCount = store.tableRowCount(snap, "frontier")
       seenCount += metrics("new_links")
       fetched.unpersist()
@@ -426,11 +431,14 @@ object CrawlLoop extends Serializable {
 
   /** The crawl's output over every committed wave of `store`. */
   private[crawl] def result(spark: SparkSession, store: SnapshotStore,
-      waves: Int): Result = Result(
-    readTables(spark, deltaPaths(store, "records_w"), RecordSchema),
-    readTables(spark, deltaPaths(store, "fetch_log_w"), FetchLogSchema),
-    seenUnion(spark, store),
-    waves)
+      waves: Int): Result = {
+    val chain = store.snapshots.map(store.readManifest)
+    Result(
+      readTables(spark, deltaPaths(chain, "records_w"), RecordSchema),
+      readTables(spark, deltaPaths(chain, "fetch_log_w"), FetchLogSchema),
+      seenUnion(spark, deltaPaths(chain, "seen_w")),
+      waves)
+  }
 
   /** Every seen delta as ONE multi-path scan. The seen set is a set, so
     * the file order a multi-path scan picks does not matter; what does is
@@ -439,11 +447,10 @@ object CrawlLoop extends Serializable {
     * whole-stage-codegen stage and make each wave compile its classes
     * anew.
     */
-  private def seenUnion(spark: SparkSession,
-      store: SnapshotStore): DataFrame =
-    deltaPaths(store, "seen_w") match {
+  private def seenUnion(spark: SparkSession, paths: Seq[String]): DataFrame =
+    paths match {
       case Seq() => emptyFrame(spark, SeenSchema)
-      case paths => spark.read.schema(SeenSchema).parquet(paths: _*)
+      case _ => spark.read.schema(SeenSchema).parquet(paths: _*)
     }
 
   /** Union, in `paths` order, of tables this loop wrote with `schema`.
@@ -466,11 +473,12 @@ object CrawlLoop extends Serializable {
   private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
-  /** Paths of every per-wave delta table named `prefix*`, oldest first. */
-  private def deltaPaths(store: SnapshotStore, prefix: String): Seq[String] =
-    store.snapshots.flatMap { id =>
-      store.readManifest(id).tables.collect {
-        case (name, path) if name.startsWith(prefix) => path
-      }
-    }.distinct
+  /** Paths of every per-wave delta table named `prefix*` in `chain`
+    * (committed snapshots, oldest first), in chain order.
+    */
+  private def deltaPaths(chain: Seq[SnapshotStore#Snapshot],
+      prefix: String): Seq[String] =
+    chain.flatMap(_.tables.collect {
+      case (name, path) if name.startsWith(prefix) => path
+    }).distinct
 }

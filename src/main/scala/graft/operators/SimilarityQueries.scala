@@ -5,22 +5,28 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** Similarity search over the `embeddings` table (`embedding:
-  * array<float>`, 64-dim): brute-force cosine top-k as the exactness
-  * baseline and a random-hyperplane LSH bucketed variant as the scale
-  * path. The per-pair cosine and the hyperplane signature are native
-  * codegen expressions ([[graft.functions.CosineE4]] /
-  * [[graft.functions.RhpSig64]]) — the `zip_with` + `aggregate` HOF twins
-  * below are retained ONLY as the spec-pinned reference semantics: HOF
-  * lambdas are NOT whole-stage-codegen'd (interpreted per-element eval,
-  * see TextExpressions scaladoc), and the cosine needs three such folds
-  * per candidate pair.
+  * array<float>`, 64-dim) through four ANN indexes: brute force (the
+  * exactness baseline), random-hyperplane LSH buckets, IVF coarse cells
+  * and PQ codes (ADC). Each index is ONE candidate generator over a
+  * corpus frame and a `(query_id, q)` query frame ([[bruteCandidates]],
+  * [[lshCandidates]], [[ivfCandidates]], [[pqCandidates]]), shared by the
+  * two query families: the single-vector queries (q25/q26/q51/q55) pass
+  * vec 0 as a one-row, broadcast query table and cut one top-10; the
+  * k-NN joins (q64/q65/q69/q70) pass the [[KnnQueryMod]] table and cut
+  * per query ([[topKPerQuery]]). The per-pair cosine and the hyperplane
+  * signature are native codegen expressions ([[graft.functions.CosineE4]]
+  * / [[graft.functions.RhpSig64]]) — the `zip_with` + `aggregate` HOF
+  * twins below are retained ONLY as the spec-pinned reference semantics:
+  * HOF lambdas are NOT whole-stage-codegen'd (interpreted per-element
+  * eval, see TextExpressions scaladoc), and the cosine needs three such
+  * folds per candidate pair.
   *
-  * Scale notes: brute-force is O(N) per query and only acceptable for
-  * reranking; the LSH variant buckets the corpus ONCE (a narrow map), and
-  * each query touches only its probe buckets — at 10^10 vectors the
-  * bucketed table is what you'd range-partition and z-order. Near-dup
-  * pairing is blocked by label (the natural pre-cluster) so no all-pairs
-  * join appears.
+  * Scale notes: brute force is O(N) per query and only acceptable for
+  * reranking; the indexed generators bucket or encode the corpus ONCE (a
+  * narrow map), and each query touches only its probe buckets or cells —
+  * at 10^10 vectors the bucketed table is what you'd range-partition and
+  * z-order. Near-dup pairing is blocked by label (the natural
+  * pre-cluster) so no all-pairs join appears.
   */
 object SimilarityQueries {
   import CoreQueries.t
@@ -66,22 +72,55 @@ object SimilarityQueries {
         x === Float.PositiveInfinity || x === Float.NegativeInfinity) &&
       exists(v, x => x =!= 0.0f)
 
-  /** Brute-force cosine top-k against the deterministic query vector
-    * (vec_id = 0). TakeOrdered physical op: per-partition top-k then a
-    * k-row merge on the driver — no global sort shuffle.
+  /** The corpus and the query table `(query_id, q)` of one query: the
+    * rows `isQuery` picks are the queries, every other row is the corpus,
+    * so a query never matches itself.
     */
-  def annBruteForce(s: SparkSession, dir: String): DataFrame = {
+  private def split(s: SparkSession, dir: String,
+      isQuery: Column): (DataFrame, DataFrame) = {
     val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q"))
-    emb.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(query))
-      .select(col("vec_id"),
-        cosE4(col("embedding"), col("q")).as("cos_e4"))
-      .filter(col("cos_e4").isNotNull) // ragged/null-lane vectors are
-      // not candidates (mirrors the oracle's valid-vector scan)
+    (emb.filter(!isQuery), emb.filter(isQuery)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q")))
+  }
+
+  /** The single-vector queries' corpus and one-row query table (vec 0). */
+  private def vec0Split(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) =
+    split(s, dir, col("vec_id") === 0)
+
+  /** Exact score of each candidate pair, `(query_id, vec_id, cos_e4)`;
+    * ragged/null-lane corpus vectors score NULL and are dropped here, so
+    * they can't occupy a top-k slot (the oracle's valid-vector scan never
+    * sees them at all).
+    */
+  private def exact(pairs: DataFrame): DataFrame =
+    pairs.select(col("query_id"), col("vec_id"),
+      cosE4(col("embedding"), col("q")).as("cos_e4"))
+      .filter(col("cos_e4").isNotNull)
+
+  /** The single-vector top-10 by exact score: TakeOrderedAndProject, a
+    * per-partition top-k then a k-row merge on the driver — no global
+    * sort shuffle (plan-pinned in PlanSpec).
+    */
+  private def top10(scored: DataFrame): DataFrame =
+    scored.select(col("vec_id"), col("cos_e4"))
       .orderBy(col("cos_e4").desc, col("vec_id"))
       .limit(10)
+
+  /** Brute-force candidates: every corpus vector against every query, the
+    * query table broadcast across one corpus scan (a nested-loop join —
+    * scoring all pairs IS the index).
+    */
+  private def bruteCandidates(corpus: DataFrame,
+      queries: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(queries))
+
+  /** Brute-force cosine top-k against the deterministic query vector
+    * (vec_id = 0): [[bruteCandidates]], exact scores, [[top10]].
+    */
+  def annBruteForce(s: SparkSession, dir: String): DataFrame = {
+    val (corpus, query) = vec0Split(s, dir)
+    top10(exact(bruteCandidates(corpus, query)))
   }
 
   /** Random-hyperplane signature: bit j = sign of dot(v, h_j) where
@@ -112,25 +151,25 @@ object SimilarityQueries {
     ColumnBridge.column(graft.functions.RhpSig64(
       ColumnBridge.expression(v), nBits))
 
-  /** LSH-bucketed ANN: corpus bucketed by hyperplane signature; the query
-    * probes its own bucket plus all hamming-1 neighbors and reranks the
-    * candidates exactly — candidates ≪ corpus is the entire point.
+  /** LSH candidates: the corpus bucketed ONCE by hyperplane signature;
+    * each query probes its own bucket plus all 8 hamming-1 neighbours (9
+    * distinct buckets; a corpus vector has ONE bucket, so pairs cannot
+    * duplicate) — candidates ≪ corpus is the entire point.
     */
+  private def lshCandidates(corpus: DataFrame,
+      queries: DataFrame): DataFrame = {
+    val qb = rhpSigCol(col("q"))
+    val probes = queries.select(col("query_id"), col("q"),
+      explode(array(qb +: (0 until 8).map(j =>
+        qb.bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
+    corpus.withColumn("bucket", rhpSigCol(col("embedding")))
+      .join(probes, "bucket")
+  }
+
+  /** LSH-bucketed ANN: [[lshCandidates]] for vec 0, reranked exactly. */
   def annLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-      .withColumn("bucket", rhpSigCol(col("embedding")))
-    val query = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q"), col("bucket").as("qb"))
-    val probes = query.select(col("q"),
-      explode(array(col("qb") +: (0 until 8).map(j =>
-        col("qb").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-    emb.filter(col("vec_id") =!= 0)
-      .join(broadcast(probes), "bucket")
-      .select(col("vec_id"),
-        cosE4(col("embedding"), col("q")).as("cos_e4"))
-      .filter(col("cos_e4").isNotNull)
-      .orderBy(col("cos_e4").desc, col("vec_id"))
-      .limit(10)
+    val (corpus, query) = vec0Split(s, dir)
+    top10(exact(lshCandidates(corpus, broadcast(query))))
   }
 
   // ---- IVF-style ANN (q51) -----------------------------------------------
@@ -165,33 +204,33 @@ object SimilarityQueries {
   def ivfCell(v: Column, cents: Array[Array[Float]]): Column =
     element_at(ivfSorted(v, cents), 1).getField("j").cast("int")
 
-  /** IVF ANN: assign the corpus to the [[Codebooks]]-trained coarse cells
-    * ONCE (a narrow map — at 10^10 vectors this is the partition/cluster
-    * key you'd write the table by), probe the query's `IvfProbes` nearest
-    * cells only, rerank the candidates exactly with the cosine kernel.
-    * Complements [[annLsh]] (hyperplane buckets): same plan shape,
-    * data-adaptive cells.
+  /** IVF candidates: the corpus assigned to its [[Codebooks]]-trained
+    * coarse cell ONCE (a narrow map — at 10^10 vectors this is the
+    * partition/cluster key you'd write the table by); each query explodes
+    * to its [[IvfProbes]] nearest cells, the first n of the same sorted
+    * struct array the assignment uses. A corpus vector has exactly ONE
+    * cell, so no (query, vector) pair can duplicate.
     */
-  def annIvf(s: SparkSession, dir: String): DataFrame = {
-    val cents = Codebooks.ivf(s, dir)
-    val emb = t(s, dir, "embeddings")
-    val corpus = emb.filter(col("vec_id") =!= 0)
-      .withColumn("cell", ivfCell(col("embedding"), cents))
-    // query's nprobe nearest cells: first n of the same sorted struct
-    // array the assignment uses
-    val query = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q"),
-        slice(ivfSorted(col("embedding"), cents), 1, IvfProbes).getField("j")
-          .as("cells"))
-    val probes = query.select(col("q"), explode(col("cells")).as("cell"))
-    corpus.join(broadcast(probes), "cell")
-      .select(col("vec_id"), cosE4(col("embedding"), col("q")).as("cos_e4"))
-      .filter(col("cos_e4").isNotNull)
-      .orderBy(col("cos_e4").desc, col("vec_id"))
-      .limit(10)
+  private def ivfCandidates(cents: Array[Array[Float]])(corpus: DataFrame,
+      queries: DataFrame): DataFrame = {
+    val probes = queries.select(col("query_id"), col("q"),
+      explode(slice(ivfSorted(col("q"), cents), 1, IvfProbes).getField("j"))
+        .as("cell"))
+    corpus.withColumn("cell", ivfCell(col("embedding"), cents))
+      .join(probes, "cell")
   }
 
-  // ---- k-NN JOIN (q64/q65): a query TABLE, not one vector ----------------
+  /** IVF ANN: [[ivfCandidates]] for vec 0, reranked exactly. Complements
+    * [[annLsh]] (hyperplane buckets): same plan shape, data-adaptive
+    * cells.
+    */
+  def annIvf(s: SparkSession, dir: String): DataFrame = {
+    val (corpus, query) = vec0Split(s, dir)
+    top10(exact(ivfCandidates(Codebooks.ivf(s, dir))(corpus,
+      broadcast(query))))
+  }
+
+  // ---- k-NN JOIN (q64/q65/q69/q70): a query TABLE, not one vector -------
 
   /** Which vec_ids form the query table for the k-NN join queries:
     * every [[KnnQueryMod]]-th id (10 queries at the 500-row test scales,
@@ -203,7 +242,19 @@ object SimilarityQueries {
   /** Neighbors returned per query row. */
   val KnnK = 10
 
-  /** Per-query bounded top-k over scored (query_id, vec_id, cos_e4)
+  /** The k-NN joins' corpus and query table, with [[validVec]] query
+    * vectors only, once for every index: an invalid query scores NULL
+    * against every valid vector, yet still gets real LSH buckets and IVF
+    * cells (a vector under 64 lanes lands in bucket 0), where it would
+    * score against invalid corpus vectors of its own length.
+    */
+  private def knnSplit(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val (corpus, queries) = split(s, dir, col("vec_id") % KnnQueryMod === 0)
+    (corpus, queries.filter(validVec(col("q"))))
+  }
+
+  /** Per-query bounded top-k over exact-scored (query_id, vec_id, cos_e4)
     * candidates: `row_number ≤ k` over (query_id | cos DESC, vec_id),
     * which Spark 4 plans as `WindowGroupLimit` — each map task keeps at
     * most k rows PER QUERY before the shuffle (plan-pinned in PlanSpec),
@@ -217,11 +268,6 @@ object SimilarityQueries {
       .partitionBy(col("query_id"))
       .orderBy(col("cos_e4").desc, col("vec_id"))
     scored
-      // ragged/null-lane corpus vectors score NULL — drop them BEFORE
-      // ranking so they can't occupy rank slots when a query's probe
-      // set has fewer than k valid candidates (the oracle's
-      // valid-vector scan never sees them at all)
-      .filter(col("cos_e4").isNotNull)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .orderBy(col("query_id"), col("rank"))
@@ -229,133 +275,71 @@ object SimilarityQueries {
 
   /** IVF k-NN JOIN: every query's exact-reranked top-[[KnnK]] against the
     * corpus — the retrieval-eval / cluster-assignment / candidate-gen
-    * workhorse, vs [[annIvf]]'s single broadcast vector. Shape: corpus
-    * assigned to its trained coarse cell ONCE (narrow map — the table's
-    * partition key at 10^10 vectors); each query explodes to its
-    * [[IvfProbes]] nearest cells; an equi-join on `cell` pairs each query
-    * with only its probe-cell candidates (each corpus vector has exactly
-    * ONE cell, so no (query, vector) pair can duplicate); per-query top-k
-    * via [[topKPerQuery]]. With 10^6 queries nothing changes: the join
-    * shuffles both sides on `cell` instead of broadcasting the probe side
-    * (AQE's choice, not the plan's), and the WindowGroupLimit keeps the
-    * top-k shuffle bounded.
+    * workhorse — from [[ivfCandidates]] and [[topKPerQuery]]. With 10^6
+    * queries nothing changes: the probe join is unhinted, so it shuffles
+    * both sides on `cell` instead of broadcasting the probe side (AQE's
+    * choice, not the plan's), and the WindowGroupLimit keeps the top-k
+    * shuffle bounded.
     */
   def knnJoinIvf(s: SparkSession, dir: String): DataFrame = {
-    val cents = Codebooks.ivf(s, dir)
-    val emb = t(s, dir, "embeddings")
-    val isQuery = col("vec_id") % KnnQueryMod === 0
-    val corpus = emb.filter(!isQuery)
-      .withColumn("cell", ivfCell(col("embedding"), cents))
-    // an invalid QUERY vector still gets real probe-cell indices from
-    // the struct sort (only the scores are null), so it must be
-    // excluded explicitly — the same [[validVec]] predicate the
-    // codebook trainer and the oracle CTEs use
-    val probes = emb.filter(isQuery)
-      .filter(validVec(col("embedding")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        explode(slice(ivfSorted(col("embedding"), cents), 1, IvfProbes)
-          .getField("j")).as("cell"))
-    val scored = corpus.join(probes, "cell")
-      .select(col("query_id"), col("vec_id"),
-        cosE4(col("embedding"), col("q")).as("cos_e4"))
-    topKPerQuery(scored, KnnK)
+    val (corpus, queries) = knnSplit(s, dir)
+    topKPerQuery(exact(ivfCandidates(Codebooks.ivf(s, dir))(corpus,
+      queries)), KnnK)
   }
 
-  /** LSH k-NN JOIN: the [[annLsh]] hyperplane buckets driven by a query
-    * TABLE — corpus bucketed once by signature, each query probing its
-    * own bucket plus all hamming-1 neighbors (9 distinct buckets; a
-    * corpus vector has ONE bucket, so pairs cannot duplicate), exact
+  /** LSH k-NN JOIN: [[lshCandidates]] driven by the query TABLE, exact
     * rerank per query via [[topKPerQuery]]. Complements [[knnJoinIvf]]:
     * same join shape, data-independent buckets (no training pass), lower
     * recall on isotropic data — the LSH-vs-IVF tradeoff made measurable
     * side by side.
     */
   def knnJoinLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-      .withColumn("bucket", rhpSigCol(col("embedding")))
-    val isQuery = col("vec_id") % KnnQueryMod === 0
-    val corpus = emb.filter(!isQuery)
-    val probes = emb.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        explode(array(col("bucket") +: (0 until 8).map(j =>
-          col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-    val scored = corpus.join(probes, "bucket")
-      .select(col("query_id"), col("vec_id"),
-        cosE4(col("embedding"), col("q")).as("cos_e4"))
-    topKPerQuery(scored, KnnK)
+    val (corpus, queries) = knnSplit(s, dir)
+    topKPerQuery(exact(lshCandidates(corpus, queries)), KnnK)
   }
 
   /** IVF-PQ k-NN JOIN (q69): the FAISS-standard index composition driven
-    * by a query TABLE — coarse cells bound WHICH candidates each query
-    * touches ([[IvfProbes]] trained cells, as q64), PQ codes bound what
-    * the shortlist scan READS (8-byte ADC, no float access — as q55),
-    * and only the per-query top-[[PqRerank]] shortlist touches raw
-    * embeddings for the exact rerank. Both per-query cuts are rank
-    * windows that plan as WindowGroupLimit (map-side bounded before
-    * each shuffle). At 10^10 vectors this is the plan you would
-    * actually run: the corpus is written partitioned by cell with its
-    * code column, a query reads ~nprobe/k of the cells, the ADC scan
-    * streams codes, and the rerank is a key-fetch of
-    * queries × [[PqRerank]] float rows (here the embedding rides the
-    * candidate row because the corpus is one table, q55's documented
-    * tradeoff).
+    * by a query TABLE — [[ivfCandidates]] bound WHICH candidates each
+    * query touches, [[pqCandidates]] bound what the shortlist scan READS
+    * (8-byte ADC, no float access), and only the per-query
+    * top-[[PqRerank]] shortlist touches raw embeddings for the exact
+    * rerank. Both per-query cuts are rank windows that plan as
+    * WindowGroupLimit (map-side bounded before each shuffle). At 10^10
+    * vectors this is the plan you would actually run: the corpus is
+    * written partitioned by cell with its code column, a query reads
+    * ~nprobe/k of the cells, the ADC scan streams codes, and the rerank
+    * is a key-fetch of queries × [[PqRerank]] float rows (here the
+    * embedding rides the candidate row because the corpus is one table,
+    * q55's documented tradeoff).
     */
   def knnJoinIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val cents = Codebooks.ivf(s, dir)
-    val cb = Codebooks.pq(s, dir)
-    val emb = t(s, dir, "embeddings")
-    val isQuery = col("vec_id") % KnnQueryMod === 0
-    val corpus = emb.filter(!isQuery)
-      .withColumn("cell", ivfCell(col("embedding"), cents))
-      .withColumn("codes", pqCodesCol(col("embedding"), cb))
-    val probes = emb.filter(isQuery)
-      .filter(validVec(col("embedding")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        explode(slice(ivfSorted(col("embedding"), cents), 1, IvfProbes)
-          .getField("j")).as("cell"))
-    val adc = corpus.join(probes, "cell")
-      .select(col("query_id"), col("vec_id"), col("embedding"), col("q"),
-        pqCosCol(col("codes"), col("q"), cb).as("adc_e4"))
-      .filter(col("adc_e4").isNotNull) // invalid vectors have no codes
+    val (corpus, queries) = knnSplit(s, dir)
+    val adc = pqCandidates(Codebooks.pq(s, dir),
+      ivfCandidates(Codebooks.ivf(s, dir)))(corpus, queries)
     val wAdc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("adc_e4").desc, col("vec_id"))
     val shortlist = adc
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= PqRerank)
-    topKPerQuery(
-      shortlist.select(col("query_id"), col("vec_id"),
-        cosE4(col("embedding"), col("q")).as("cos_e4")),
-      KnnK)
+    topKPerQuery(exact(shortlist), KnnK)
   }
 
   /** Brute-force k-NN JOIN (q70): every query's EXACT top-[[KnnK]] — the
     * ground-truth twin of [[knnJoinIvf]]/[[knnJoinLsh]]/[[knnJoinIvfPq]],
-    * and the operator a pipeline runs to MEASURE their recall (the
-    * recall yardstick the specs compute inline, promoted to a first-class
-    * query). Shape: the query table rides a broadcast nested-loop join
-    * against one full corpus scan — O(|Q|·N) scores by definition, so
-    * this is the right tool exactly when |Q| is small (retrieval-eval
-    * sets, 10²–10⁵ queries — broadcastable); at that size the corpus
-    * never shuffles and the per-query top-k cut is map-side
-    * (WindowGroupLimit, plan-pinned), so the one shuffle moves
-    * O(tasks × |Q| × k) rows. A LARGE query table has no brute-force
-    * plan worth running — the quadratic score count is the cost, not the
-    * join strategy — which is what the indexed variants are for.
+    * and the operator a pipeline runs to MEASURE their recall. Through
+    * [[bruteCandidates]] it is O(|Q|·N) scores by definition, so this is
+    * the right tool exactly when |Q| is small (retrieval-eval sets,
+    * 10²–10⁵ queries — broadcastable); at that size the corpus never
+    * shuffles and the per-query top-k cut is map-side (WindowGroupLimit,
+    * plan-pinned), so the one shuffle moves O(tasks × |Q| × k) rows. A
+    * LARGE query table has no brute-force plan worth running — the
+    * quadratic score count is the cost, not the join strategy — which is
+    * what the indexed variants are for.
     */
   def knnJoinBrute(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val isQuery = col("vec_id") % KnnQueryMod === 0
-    val corpus = emb.filter(!isQuery)
-    // invalid query vectors score NULL against everything and would
-    // return empty groups; exclude them like every other query path
-    val queries = emb.filter(isQuery)
-      .filter(validVec(col("embedding")))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        cosE4(col("embedding"), col("q")).as("cos_e4"))
-    topKPerQuery(scored, KnnK)
+    val (corpus, queries) = knnSplit(s, dir)
+    topKPerQuery(exact(bruteCandidates(corpus, queries)), KnnK)
   }
 
   // ---- PQ ANN (q55) --------------------------------------------------------
@@ -386,31 +370,35 @@ object SimilarityQueries {
     */
   val PqRerank = 100
 
-  /** PQ ANN: the corpus is encoded ONCE into 8-byte codes (a narrow map —
-    * at 10^10 vectors the 256 B float rows become an 80 GB code table
-    * spread across a cluster's executor memory, which is the entire point
-    * of PQ), the query is scored against every code by reconstruction
-    * cosine (one codegen kernel call per row, no float vector read), and
-    * only the top [[PqRerank]] candidates touch their raw embeddings for
-    * the exact rerank. Completes the ANN family: brute (exact baseline),
-    * LSH (hyperplane buckets), IVF (coarse cells), PQ (compressed
-    * exhaustive). The raw embedding rides the candidate row here because
-    * the corpus is one table; at scale the rerank is a 100-row
-    * broadcast-hash fetch against the vector store instead — the ADC scan
-    * itself never reads floats either way.
+  /** ADC candidates: the corpus is encoded ONCE into 8-byte PQ codes,
+    * before any join (a narrow map — at 10^10 vectors the 256 B float rows
+    * become an 80 GB code table spread across a cluster's executor
+    * memory, which is the entire point of PQ), `gen` pairs it with the
+    * queries, and each pair is scored by reconstruction cosine (one
+    * codegen kernel call per row, no float vector read) as `adc_e4`.
+    * Invalid corpus vectors have no codes and drop out. The raw embedding
+    * and query ride the candidate row for the caller's exact rerank of
+    * its shortlist.
+    */
+  private def pqCandidates(cb: Array[Double],
+      gen: (DataFrame, DataFrame) => DataFrame)(corpus: DataFrame,
+      queries: DataFrame): DataFrame =
+    gen(corpus.withColumn("codes", pqCodesCol(col("embedding"), cb)), queries)
+      .select(col("query_id"), col("vec_id"), col("embedding"), col("q"),
+        pqCosCol(col("codes"), col("q"), cb).as("adc_e4"))
+      .filter(col("adc_e4").isNotNull)
+
+  /** PQ ANN: [[pqCandidates]] over [[bruteCandidates]] for vec 0, and
+    * only the top [[PqRerank]] by ADC touch their raw embeddings for the
+    * exact rerank. Completes the ANN family: brute (exact baseline), LSH
+    * (hyperplane buckets), IVF (coarse cells), PQ (compressed
+    * exhaustive). At scale the rerank is a 100-row broadcast-hash fetch
+    * against the vector store instead — the ADC scan itself never reads
+    * floats either way.
     */
   def annPq(s: SparkSession, dir: String): DataFrame = {
-    val cb = Codebooks.pq(s, dir)
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q"))
-    emb.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"),
-        pqCodesCol(col("embedding"), cb).as("codes"))
-      .crossJoin(broadcast(query))
-      .select(col("vec_id"), col("embedding"), col("q"),
-        pqCosCol(col("codes"), col("q"), cb).as("adc_e4"))
-      .filter(col("adc_e4").isNotNull) // invalid vectors have no codes
+    val (corpus, query) = vec0Split(s, dir)
+    pqCandidates(Codebooks.pq(s, dir), bruteCandidates)(corpus, query)
       .orderBy(col("adc_e4").desc, col("vec_id"))
       .limit(PqRerank)
       .select(col("vec_id"), col("adc_e4"),

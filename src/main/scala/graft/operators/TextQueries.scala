@@ -368,10 +368,11 @@ object TextQueries {
     * stream against the counts TABLE (AQE broadcasts it at small scale; at
     * 10^10 docs it stays a shuffle join keyed by gram, plus a min-count
     * prune as the model-size dial) and partial-aggregates the per-doc sum.
-    * No driver-side model state at any size. Self-training makes the gram
-    * kernel feed two consumers (Catalyst clones the narrow map, as in
-    * ngramJaccard); a production run trains and scores as separate jobs
-    * over the persisted counts table, which removes the clone.
+    * No driver-side model state at any size. Self-training is
+    * [[perplexityScoredWith]] over the corpus's own [[bigramCounts]], so
+    * the gram kernel runs once for the counts and once for the scoring
+    * (two scans of the text); a production run trains and scores as
+    * separate jobs over the persisted counts table.
     *
     * Output: (doc_id, n_bigrams, logp_e4 total, mean_e4, bucket) with
     * bucket ∈ head/middle/tail/short ("short" = no bigram at all).
@@ -380,51 +381,14 @@ object TextQueries {
     perplexityScored(s, dir).orderBy("doc_id")
 
   /** [[perplexityFilter]] without the presentation sort — shared with the
-    * q63 pipeline (flag joins don't need order).
+    * q63 pipeline (flag joins don't need order): the corpus scored by
+    * [[perplexityScoredWith]] under its own [[bigramCounts]].
     */
   private[operators] def perplexityScored(s: SparkSession,
       dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val grams = docs.select(col("doc_id"),
-      explode(DedupQueries.wordGrams(col("text"), 2)).as("g"))
-    val c12 = grams.groupBy("g").agg(count(lit(1)).as("c12"))
-    val c1 = c12.groupBy(substring_index(col("g"), " ", 1).as("w1"))
-      .agg(sum("c12").as("c1"))
-    // V: distinct second words — a 1-row aggregate ridden as a broadcast
-    // (the highWaterStop pattern: one plan, no collect)
-    val vocab = c12.select(substring_index(col("g"), " ", -1).as("w2"))
-      .distinct().agg(count(lit(1)).as("vsz"))
-    val model = c12
-      .withColumn("w1", substring_index(col("g"), " ", 1))
-      .join(c1, "w1")
-      .select(col("g"), col("c12"), col("c1"))
-    val perDoc = grams.join(model, "g")
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"),
-        floor(log((col("c12") + 1).cast("double") /
-          (col("c1") + col("vsz")).cast("double")) * 10000)
-          .cast("long").as("lp"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("lp").as("logp_e4"))
-    pplFinish(docs, perDoc)
+    perplexityScoredWith(docs, bigramCounts(docs))
   }
-
-  /** The shared q57-family tail: per-doc nulls → zeros, the discretized
-    * mean, the head/middle/tail/short bucket rule.
-    */
-  private def pplFinish(docs: DataFrame, perDoc: DataFrame): DataFrame =
-    docs.select("doc_id").join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("logp_e4"), lit(0L)).as("logp_e4"))
-      .withColumn("mean_e4",
-        when(col("n_bigrams") === 0, lit(0L))
-          .otherwise(floor(col("logp_e4") / col("n_bigrams")).cast("long")))
-      .withColumn("bucket",
-        when(col("n_bigrams") === 0, "short")
-          .when(col("mean_e4") >= PplHeadE4, "head")
-          .when(col("mean_e4") >= PplTailE4, "middle")
-          .otherwise("tail"))
 
   /** Bigram counts (g, c12) of a corpus — the model-table builder for the
     * external-reference scoring paths ([[perplexityScoredWith]] /
@@ -439,9 +403,9 @@ object TextQueries {
     * `docs` under the add-one-smoothed bigram LM defined by `refCounts`
     * (any (g: string, c12: long) table — a held-out slice, a curated
     * reference corpus, yesterday's snapshot; CCNet scores against
-    * Wikipedia-trained KenLM, this is that input socket). Differences vs
-    * the self-trained fast path: a scored gram may be ABSENT from the
-    * model, so both count lookups are left joins — an unseen bigram
+    * Wikipedia-trained KenLM, this is that input socket; q57 passes the
+    * scored corpus's own counts). A scored gram may be ABSENT from an
+    * external model, so both count lookups are left joins — an unseen bigram
     * smooths to (0+1)/(c1+V) and an unseen context to 1/V, which is the
     * whole point of the smoothing. V is the model's second-word
     * vocabulary, a property of the reference, not of the scored corpus.
@@ -470,7 +434,20 @@ object TextQueries {
           * 10000).cast("long").as("lp"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("lp").as("logp_e4"))
-    pplFinish(docs, perDoc)
+    // per-doc nulls → zeros, the discretized mean, the
+    // head/middle/tail/short bucket rule
+    docs.select("doc_id").join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col("logp_e4"), lit(0L)).as("logp_e4"))
+      .withColumn("mean_e4",
+        when(col("n_bigrams") === 0, lit(0L))
+          .otherwise(floor(col("logp_e4") / col("n_bigrams")).cast("long")))
+      .withColumn("bucket",
+        when(col("n_bigrams") === 0, "short")
+          .when(col("mean_e4") >= PplHeadE4, "head")
+          .when(col("mean_e4") >= PplTailE4, "middle")
+          .otherwise("tail"))
   }
 
   /** Which doc_ids form the in-sandbox stand-in for an external reference

@@ -514,4 +514,43 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.seen.inputFiles.map(f =>
       java.nio.file.Paths.get(new java.net.URI(f))).toSet == seenFiles.toSet)
   }
+
+  test("manifest reads per wave stay flat as the chain grows: the loop " +
+    "reads the chain once and appends each wave's seen delta") {
+    import spark.implicits._
+    def url(i: Int) = s"https://flat.example.org/p$i"
+    val pages = (0 until 64).map { i =>
+      val anchors = Seq(2 * i + 1, 2 * i + 2)
+        .map(c => s"""<li><a href="/p$c">p$c</a></li>""").mkString
+      url(i) -> s"""<html><body><div class="b_con"><h1>page $i</h1>
+        |<ul>$anchors</ul></div></body></html>""".stripMargin
+        .getBytes("UTF-8")
+    }.toDF("url", "html")
+    val seeds = Seq(SyntheticWeb.Seed(0, url(0), "blog", "")).toDS()
+    // manifest reads counted at each commit
+    var reads = 0
+    val atCommit = mutable.ArrayBuffer[Int]()
+    val store = new SnapshotStore(java.nio.file.Files
+        .createTempDirectory("crawl-manifests").toString, spark) {
+      override def readManifest(id: Long): Snapshot = {
+        reads += 1
+        super.readManifest(id)
+      }
+      override def begin(wave: Int): Pending = new Pending(wave) {
+        override def commit(metricsFn: Map[String,
+            Seq[SnapshotStore.DataFile]] => Map[String, Long]): Snapshot = {
+          val snap = super.commit(metricsFn)
+          atCommit += reads
+          snap
+        }
+      }
+    }
+    val res = CrawlLoop.run(spark, pages, seeds,
+      spark.emptyDataset[SyntheticWeb.Robots], store, crawlCfg.copy(
+        maxWaves = 6, scheduler = crawlCfg.scheduler.copy(hostBudget = 2)))
+    assert(res.waves == 6 && atCommit.size == 6)
+    val perWave = atCommit.zip(atCommit.tail).map { case (a, b) => b - a }
+    assert(perWave.drop(1).forall(_ == perWave.head),
+      s"manifest reads per wave: $perWave")
+  }
 }
