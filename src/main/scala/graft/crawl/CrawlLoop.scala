@@ -193,8 +193,8 @@ object CrawlLoop extends Serializable {
     // construction, so their row counts sum to the seen-set size). The
     // manifest chain is read once here; each wave then appends the seen
     // delta it committed.
-    val head = store.head
-    val chain = store.snapshots.map(store.readManifest)
+    val chain = store.chain
+    val head = chain.lastOption
     var seenPaths = deltaPaths(chain, "seen_w")
     val startWave = head.fold(0)(_.wave + 1)
     var frontier = head match {
@@ -432,7 +432,7 @@ object CrawlLoop extends Serializable {
   /** The crawl's output over every committed wave of `store`. */
   private[crawl] def result(spark: SparkSession, store: SnapshotStore,
       waves: Int): Result = {
-    val chain = store.snapshots.map(store.readManifest)
+    val chain = store.chain
     Result(
       readTables(spark, deltaPaths(chain, "records_w"), RecordSchema),
       readTables(spark, deltaPaths(chain, "fetch_log_w"), FetchLogSchema),

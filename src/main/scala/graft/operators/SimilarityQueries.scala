@@ -83,11 +83,6 @@ object SimilarityQueries {
       .select(col("vec_id").as("query_id"), col("embedding").as("q")))
   }
 
-  /** The single-vector queries' corpus and one-row query table (vec 0). */
-  private def vec0Split(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    split(s, dir, col("vec_id") === 0)
-
   /** Exact score of each candidate pair, `(query_id, vec_id, cos_e4)`;
     * ragged/null-lane corpus vectors score NULL and are dropped here, so
     * they can't occupy a top-k slot (the oracle's valid-vector scan never
@@ -119,7 +114,7 @@ object SimilarityQueries {
     * (vec_id = 0): [[bruteCandidates]], exact scores, [[top10]].
     */
   def annBruteForce(s: SparkSession, dir: String): DataFrame = {
-    val (corpus, query) = vec0Split(s, dir)
+    val (corpus, query) = split(s, dir, col("vec_id") === 0)
     top10(exact(bruteCandidates(corpus, query)))
   }
 
@@ -168,7 +163,7 @@ object SimilarityQueries {
 
   /** LSH-bucketed ANN: [[lshCandidates]] for vec 0, reranked exactly. */
   def annLsh(s: SparkSession, dir: String): DataFrame = {
-    val (corpus, query) = vec0Split(s, dir)
+    val (corpus, query) = split(s, dir, col("vec_id") === 0)
     top10(exact(lshCandidates(corpus, broadcast(query))))
   }
 
@@ -225,7 +220,7 @@ object SimilarityQueries {
     * cells.
     */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
-    val (corpus, query) = vec0Split(s, dir)
+    val (corpus, query) = split(s, dir, col("vec_id") === 0)
     top10(exact(ivfCandidates(Codebooks.ivf(s, dir))(corpus,
       broadcast(query))))
   }
@@ -397,7 +392,7 @@ object SimilarityQueries {
     * floats either way.
     */
   def annPq(s: SparkSession, dir: String): DataFrame = {
-    val (corpus, query) = vec0Split(s, dir)
+    val (corpus, query) = split(s, dir, col("vec_id") === 0)
     pqCandidates(Codebooks.pq(s, dir), bruteCandidates)(corpus, query)
       .orderBy(col("adc_e4").desc, col("vec_id"))
       .limit(PqRerank)

@@ -227,24 +227,20 @@ class SnapshotStore(val root: String, spark: SparkSession) {
   def tableRowCount(snap: Snapshot, name: String): Long =
     snap.files.get(name).fold(0L)(SnapshotStore.rowCount)
 
-  /** All COMMITTED snapshot ids, ascending — by walking the parent chain
-    * from HEAD, not by listing manifest files: a crash between the
-    * manifest ATOMIC_MOVE and the HEAD swap leaves an orphan manifest on
-    * disk, and the documented guarantee is that orphans are invisible to
-    * readers. (Ids are dense `parent+1`, so the chain is the ≤-HEAD
-    * prefix; walking manifests keeps it correct even if that changes.)
+  /** All COMMITTED snapshots, oldest first, each manifest read once — by
+    * walking the parent chain from HEAD, not by listing manifest files: a
+    * crash between the manifest ATOMIC_MOVE and the HEAD swap leaves an
+    * orphan manifest on disk, and the documented guarantee is that
+    * orphans are invisible to readers. (Ids are dense `parent+1`, so the
+    * chain is the ≤-HEAD prefix; walking manifests keeps it correct even
+    * if that changes.)
     */
-  def snapshots: Seq[Long] = head match {
-    case None => Seq.empty
-    case Some(h) =>
-      val b = List.newBuilder[Long]
-      var id = h.id
-      while (id >= 0) {
-        b += id
-        id = readManifest(id).parent
-      }
-      b.result().reverse
-  }
+  def chain: Seq[Snapshot] =
+    Iterator.iterate(head)(_.map(_.parent).filter(_ >= 0).map(readManifest))
+      .takeWhile(_.isDefined).flatten.toList.reverse
+
+  /** The ids of [[chain]]. */
+  def snapshots: Seq[Long] = chain.map(_.id)
 }
 
 object SnapshotStore {

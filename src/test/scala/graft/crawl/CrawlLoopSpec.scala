@@ -490,11 +490,22 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       // JDK-internal threads refuse a new loader; they compile no SQL
       scala.util.Try(t.setContextClassLoader(fresh)).toOption.map(_ => t -> l)
     }
+    // a write plans while the wave's other writes build the cached frames
+    // it reads, and a cached frame's size estimate changes once it is
+    // built: a join against it is planned as a broadcast in one wave and
+    // a sort-merge join in the next, and each compiles its own classes.
+    // The check is about the plans the loop builds, so size-driven join
+    // choice is off (explicit broadcast hints still apply).
+    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val res =
       try CrawlLoop.run(spark, pages, seeds, robots, store, crawlCfg.copy(
         maxWaves = 5, bloomMinSeen = CrawlLoop.Config().bloomMinSeen,
         scheduler = crawlCfg.scheduler.copy(hostBudget = 2)))
-      finally loaders.foreach { case (t, l) => t.setContextClassLoader(l) }
+      finally {
+        loaders.foreach { case (t, l) => t.setContextClassLoader(l) }
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+      }
     assert(res.waves == 5 && compiles.size == 5)
     assert(compiles.drop(2).forall(_ == compiles(1)),
       s"compile count at each commit: $compiles")

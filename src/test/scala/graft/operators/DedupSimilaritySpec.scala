@@ -229,6 +229,30 @@ class DedupSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mean == 10.0, s"brute k-NN join is not exact: $mean ($recalls)")
   }
 
+  test("k-NN joins drop an invalid query vector: a 3-lane query shares " +
+    "LSH bucket 0 with a 3-lane corpus vector, yet no join answers it") {
+    import spark.implicits._
+    val real = "/root/testdata/sf0.001"
+    val d = java.nio.file.Files.createTempDirectory("knn-ragged")
+    try {
+      val emb = spark.read.parquet(s"$real/embeddings.parquet")
+      val ragged = Seq((1000L, Seq(1f, 2f, 3f)), (1001L, Seq(1f, 2f, 4f)))
+        .toDF("vec_id", "embedding")
+        .select(emb.columns.map {
+          case c @ ("vec_id" | "embedding") => col(c)
+          case c => lit(null).cast(emb.schema(c).dataType).as(c)
+        }: _*)
+      emb.unionByName(ragged).write.parquet(s"$d/embeddings.parquet")
+      Seq(SimilarityQueries.knnJoinIvf _, SimilarityQueries.knnJoinLsh _,
+          SimilarityQueries.knnJoinIvfPq _, SimilarityQueries.knnJoinBrute _)
+        .foreach { q =>
+          val ids = q(spark, d.toString).collect().map(_.getLong(0)).toSet
+          assert(!ids.contains(1000L), s"invalid query 1000 answered: $ids")
+          assert(ids.size == 10)
+        }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+  }
+
   test("ANN PQ on the real embeddings table: top-100 ADC candidates exact-" +
     "reranked recover most of the brute top-10; rerank scores are exact") {
     val real = "/root/testdata/sf0.001"

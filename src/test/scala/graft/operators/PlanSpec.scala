@@ -3,7 +3,6 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
 
@@ -366,27 +365,5 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(q45.collect().map(r => (r.getLong(0), r.getString(1),
       r.getLong(2), r.getLong(3))).toSeq ==
       Seq((1L, "d1", 3L, 5L), (2L, "d2", 2L, 0L), (3L, "d3", 0L, 0L)))
-  }
-
-  test("k-NN joins drop an invalid query vector: a 3-lane query shares " +
-    "LSH bucket 0 with a 3-lane corpus vector, yet no join answers it") {
-    import spark.implicits._
-    val real = "/root/testdata/sf0.001"
-    val d = java.nio.file.Files.createTempDirectory("knn-ragged").toString
-    val emb = spark.read.parquet(s"$real/embeddings.parquet")
-    val ragged = Seq((1000L, Seq(1f, 2f, 3f)), (1001L, Seq(1f, 2f, 4f)))
-      .toDF("vec_id", "embedding")
-      .select(emb.columns.map {
-        case c @ ("vec_id" | "embedding") => col(c)
-        case c => lit(null).cast(emb.schema(c).dataType).as(c)
-      }: _*)
-    emb.unionByName(ragged).write.parquet(s"$d/embeddings.parquet")
-    Seq(SimilarityQueries.knnJoinIvf _, SimilarityQueries.knnJoinLsh _,
-        SimilarityQueries.knnJoinIvfPq _, SimilarityQueries.knnJoinBrute _)
-      .foreach { q =>
-        val ids = q(spark, d).collect().map(_.getLong(0)).toSet
-        assert(!ids.contains(1000L), s"invalid query 1000 answered: $ids")
-        assert(ids.size == 10)
-      }
   }
 }
